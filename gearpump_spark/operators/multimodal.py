@@ -24,6 +24,18 @@ Decoding is TIERED, all pure python (no codec libraries in this rig):
   run end-to-end on any bytes; `LibraryDecoder` documents the real-codec
   seam (raises with the dependency it would need).
 
+Operators state only per-payload logic; two private seams own the Arrow
+batch protocol (how a pandas batch maps to output rows):
+- `_synthesize(df, id_col, encode_one)` / `_synth_op(encode_one)` back every
+  `synthesize_*_payloads`: `encode_one(i: int) -> bytes` builds the payload
+  for doc_id i, output `(doc_id bigint, payload binary)`;
+- `_map_payloads(df, payload_col, id_col, fn, fields_ddl)` / `_map_op` back
+  every one-to-one decoder: `fn(payload: bytes | None) -> tuple | None`
+  returns one value per DDL field, None for an all-null row; a null
+  payload reaches fn as None, so each operator keeps its own null rule.
+The one-to-many operators (sample_frames, adam7_pass_stats,
+gif_frame_stats) keep their own batch loops.
+
 Scale notes: decode work is embarrassingly parallel per partition; batches
 stream through Arrow (never a whole partition in memory at once). Payload
 columns stay out of shuffles — all operators here are narrow maps; any
@@ -33,7 +45,9 @@ downstream grouping should key on doc_id/metadata, not bytes.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+import struct
+import zlib
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -56,6 +70,161 @@ FEATURE_SCHEMA = "features array<float>"
 def _id_field(df: DataFrame, id_col: str) -> str:
     """`"<name> <type>"` for the input's id column, for output schemas."""
     return f"{id_col} {df.schema[id_col].dataType.simpleString()}"
+
+
+def _synth_op(encode_one: Callable[[int], bytes]):
+    """Synthesizer batch seam: (doc_id) batches -> (doc_id, payload)
+    batches, payload = encode_one(int(doc_id)). A function of batches, not
+    a stage, so a fused stage can compose it with a decoder seam."""
+
+    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids = pdf["doc_id"]
+            payloads = [encode_one(int(i)) for i in ids]
+            yield pd.DataFrame({"doc_id": ids.values, "payload": payloads})
+
+    return op
+
+
+def _synthesize(
+    df: DataFrame, id_col: str, encode_one: Callable[[int], bytes]
+) -> DataFrame:
+    """(doc_id bigint, payload binary) with one encode_one(id) per row."""
+    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
+        _synth_op(encode_one), "doc_id bigint, payload binary"
+    )
+
+
+def _field_names(fields_ddl: str) -> "list[str]":
+    """Field names of a flat DDL field list ("a int, b string")."""
+    return [f.split()[0] for f in fields_ddl.split(",")]
+
+
+def _map_op(fn: Callable, fields_ddl: str, payload_col: str, id_col: str):
+    """One-to-one decoder batch seam: (id, payload) batches -> (id,
+    *fields) batches holding fn's tuple per payload, or an all-null row
+    where fn returns None. Output columns are plain Python lists, so
+    pandas infers the dtype that Arrow then casts to the declared schema."""
+    cols = _field_names(fields_ddl)
+    nulls = (None,) * len(cols)
+
+    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            lists = [[] for _ in cols]
+            for p in pdf[payload_col]:
+                row = fn(None if p is None else bytes(p))
+                for out, v in zip(lists, nulls if row is None else row):
+                    out.append(v)
+            yield pd.DataFrame({id_col: pdf[id_col].values, **dict(zip(cols, lists))})
+
+    return op
+
+
+def _map_payloads(
+    df: DataFrame, payload_col: str, id_col: str, fn: Callable, fields_ddl: str
+) -> DataFrame:
+    """(id, *fields) with one fn(payload) row per input row; see _map_op.
+    ``fields_ddl`` is the output schema after the id field, e.g.
+    "width int, height int"; its field names name fn's tuple slots."""
+    return df.select(id_col, payload_col).mapInPandas(
+        _map_op(fn, fields_ddl, payload_col, id_col),
+        _id_field(df, id_col) + ", " + fields_ddl,
+    )
+
+
+def _decoded_pixels(decoder, summarize: Callable) -> Callable:
+    """fn for _map_payloads: (width, height, summarize(arr)) of the decoded
+    raster, None where the payload does not decode."""
+
+    def fn(p):
+        img = None if p is None else decoder.decode_pixels_arr(p)
+        if img is None:
+            return None
+        return img["width"], img["height"], summarize(img["arr"])
+
+    return fn
+
+
+def _sniffed_fields(sniff: Callable, fields_ddl: str) -> Callable:
+    """fn for _map_payloads: the DDL's field names looked up in the dict
+    sniff(payload) returns, None where it finds nothing."""
+    cols = _field_names(fields_ddl)
+
+    def fn(p):
+        meta = None if p is None else sniff(p)
+        return None if meta is None else tuple(meta[c] for c in cols)
+
+    return fn
+
+
+def _png_chunk(tag: bytes, body: bytes) -> bytes:
+    """One PNG chunk: length, tag, body, CRC-32 over tag + body."""
+    crc = zlib.crc32(tag + body) & 0xFFFFFFFF
+    return struct.pack(">I", len(body)) + tag + body + struct.pack(">I", crc)
+
+
+def _png_bytes(
+    w: int, h: int, raw: bytes, color_type: int = 2, interlace: int = 0
+) -> bytes:
+    """A whole 8-bit PNG: signature, IHDR, one IDAT holding zlib(raw),
+    where raw is the filtered scanlines, and IEND."""
+    ihdr = struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, interlace)
+    return (
+        b"\x89PNG\r\n\x1a\n"
+        + _png_chunk(b"IHDR", ihdr)
+        + _png_chunk(b"IDAT", zlib.compress(raw))
+        + _png_chunk(b"IEND", b"")
+    )
+
+
+def _png_filter(line: bytes, prior: bytes, ft: int) -> bytes:
+    """One 3-byte-per-pixel scanline forward-filtered with PNG filter type
+    ft (0-4: None/Sub/Up/Average/Paeth) against the prior line, filter
+    byte first."""
+    out = bytearray([ft]) + bytearray(len(line))
+    for k in range(len(line)):
+        a = line[k - 3] if k >= 3 else 0
+        b = prior[k]
+        c = prior[k - 3] if k >= 3 else 0
+        if ft == 0:
+            pred = 0
+        elif ft == 1:
+            pred = a
+        elif ft == 2:
+            pred = b
+        elif ft == 3:
+            pred = (a + b) >> 1
+        else:
+            pred = PixelDecoder._paeth(a, b, c)
+        out[k + 1] = (line[k] - pred) & 0xFF
+    return bytes(out)
+
+
+def _closed_form_rows(i: int) -> "list[list[list[int]]]":
+    """The raster the BMP/PNG/GIF synthesizers share: w = 2+id%6,
+    h = 1+id%5, pixel [B,G,R] = [(id+3x+7y)%256, (2id+5x+y)%256,
+    (3id+x+11y)%256], top-down rows."""
+    w, h = 2 + i % 6, 1 + i % 5
+    return [
+        [
+            [
+                (i + 3 * x + 7 * y) % 256,
+                (2 * i + 5 * x + y) % 256,
+                (3 * i + x + 11 * y) % 256,
+            ]
+            for x in range(w)
+        ]
+        for y in range(h)
+    ]
+
+
+def _const_color_rows(i: int) -> "list[list[list[int]]]":
+    """The constant-color raster the JPEG color synthesizers share:
+    w = 2+id%6, h = 1+id%5, R=(37id+11)%256, G=(91id+53)%256,
+    B=(13id+199)%256, as [B,G,R] rows."""
+    w, h = 2 + i % 6, 1 + i % 5
+    r, g, b = (37 * i + 11) % 256, (91 * i + 53) % 256, (13 * i + 199) % 256
+    return [[[b, g, r]] * w for _ in range(h)]
 
 
 def attach_fake_payload(df: DataFrame, text_col: str = "text", out_col: str = "payload") -> DataFrame:
@@ -1118,9 +1287,6 @@ class PixelDecoder(HeaderDecoder):
         """Re-encode a top-down [B,G,R] raster as a REAL 8-bit RGB PNG:
         filter-0 scanlines, one zlib-compressed IDAT, correct CRCs.
         Decodable by any PNG reader, and by decode_png_pixels above."""
-        import struct
-        import zlib
-
         h = len(rows)
         w = len(rows[0]) if h else 0
         import numpy as np
@@ -1130,22 +1296,7 @@ class PixelDecoder(HeaderDecoder):
             [np.zeros((h, 1), dtype=np.uint8), arr[:, :, ::-1].reshape(h, w * 3)],
             axis=1,
         ).tobytes()  # filter byte 0 (None) + RGB scanline per row
-
-        def chunk(tag: bytes, body: bytes) -> bytes:
-            return (
-                struct.pack(">I", len(body))
-                + tag
-                + body
-                + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF)
-            )
-
-        ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-        return (
-            b"\x89PNG\r\n\x1a\n"
-            + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", zlib.compress(bytes(raw)))
-            + chunk(b"IEND", b"")
-        )
+        return _png_bytes(w, h, raw)
 
     @staticmethod
     def encode_bmp(rows: list[list[list[int]]]) -> bytes:
@@ -1347,36 +1498,20 @@ class FakeDecoder:
 def decode_image_metadata(
     df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id", decoder=None
 ) -> DataFrame:
-    """Extract image metadata per payload via mapInPandas (Arrow batches).
+    """Extract image metadata per payload.
 
     Default decoder parses real PNG/BMP/GIF/JPEG headers (HeaderDecoder)
     and falls back to the deterministic FakeDecoder for unrecognized
     containers, so mixed-corpus runs never fail mid-batch."""
     decoder = decoder or HeaderDecoder()
+    cols = _field_names(IMAGE_META_SCHEMA)[1:]  # after byte_len
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = [
-                decoder.decode_image(b"" if p is None else bytes(p))
-                for p in pdf[payload_col]
-            ]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].values,
-                    "byte_len": [
-                        0 if p is None else len(bytes(p))
-                        for p in pdf[payload_col]
-                    ],
-                    "format": [m["format"] for m in metas],
-                    "width": [m["width"] for m in metas],
-                    "height": [m["height"] for m in metas],
-                    "n_channels": [m["n_channels"] for m in metas],
-                }
-            )
+    def fn(p):
+        p = p or b""
+        meta = decoder.decode_image(p)
+        return (len(p), *(meta[c] for c in cols))
 
-    return df.select(id_col, payload_col).mapInPandas(
-        op, _id_field(df, id_col) + ", " + IMAGE_META_SCHEMA
-    )
+    return _map_payloads(df, payload_col, id_col, fn, IMAGE_META_SCHEMA)
 
 
 def synthesize_wav_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1386,41 +1521,29 @@ def synthesize_wav_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     decode_audio_metadata's actual header parser, so a driver oracle can
     verify the parse against the closed-form parameters — real bytes, no
     codec libraries."""
-    import struct
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                ch, rate, bits = 1 + i % 2, 8000 + (i % 5) * 1000, 8 * (1 + i % 3)
-                block = ch * bits // 8
-                # 4 frames of REAL PCM with closed-form sample values
-                # s_k = (7·id + 13·k) % 200 − 100 (k = frame·ch + channel),
-                # scaled to the bit depth — so a sample-level decode is
-                # verifiable against pure arithmetic (see
-                # PixelDecoder.decode_audio_samples and the
-                # multimodal_audio_samples_real oracle).
-                vals = [(7 * i + 13 * k) % 200 - 100 for k in range(4 * ch)]
-                if bits == 8:  # unsigned PCM
-                    data = bytes(128 + v for v in vals)
-                elif bits == 16:  # signed little-endian, scaled ×100
-                    data = b"".join(
-                        (v * 100).to_bytes(2, "little", signed=True) for v in vals
-                    )
-                else:  # 24-bit signed little-endian, scaled ×1000
-                    data = b"".join(
-                        (v * 1000).to_bytes(3, "little", signed=True) for v in vals
-                    )
-                fmt = struct.pack("<HHIIHH", 1, ch, rate, rate * block, block, bits)
-                body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                body += b"data" + struct.pack("<I", len(data)) + data
-                payloads.append(b"RIFF" + struct.pack("<I", len(body)) + body)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
+    def encode(i: int) -> bytes:
+        ch, rate, bits = 1 + i % 2, 8000 + (i % 5) * 1000, 8 * (1 + i % 3)
+        block = ch * bits // 8
+        # 4 frames of REAL PCM with closed-form sample values
+        # s_k = (7·id + 13·k) % 200 − 100 (k = frame·ch + channel),
+        # scaled to the bit depth — so a sample-level decode is
+        # verifiable against pure arithmetic (see
+        # PixelDecoder.decode_audio_samples and the
+        # multimodal_audio_samples_real oracle).
+        vals = [(7 * i + 13 * k) % 200 - 100 for k in range(4 * ch)]
+        if bits == 8:  # unsigned PCM
+            data = bytes(128 + v for v in vals)
+        elif bits == 16:  # signed little-endian, scaled ×100
+            data = b"".join((v * 100).to_bytes(2, "little", signed=True) for v in vals)
+        else:  # 24-bit signed little-endian, scaled ×1000
+            data = b"".join((v * 1000).to_bytes(3, "little", signed=True) for v in vals)
+        fmt = struct.pack("<HHIIHH", 1, ch, rate, rate * block, block, bits)
+        body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+        body += b"data" + struct.pack("<I", len(data)) + data
+        return b"RIFF" + struct.pack("<I", len(body)) + body
 
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
-    )
+    return _synthesize(df, id_col, encode)
 
 
 def synthesize_wav_mulaw_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1430,24 +1553,16 @@ def synthesize_wav_mulaw_payloads(df: DataFrame, id_col: str = "doc_id") -> Data
     verifiable against pure SQL arithmetic. Every 7th doc gets a
     truncated container (RIFF/WAVE + fmt, no data chunk) to exercise the
     null path."""
-    import struct
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                fmt = struct.pack("<HHIIHH", 7, 1, 8000, 8000, 1, 8)
-                body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                if i % 7 != 0:
-                    data = bytes((5 * i + 17 * k) % 256 for k in range(8))
-                    body += b"data" + struct.pack("<I", len(data)) + data
-                payloads.append(b"RIFF" + struct.pack("<I", len(body)) + body)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
+    def encode(i: int) -> bytes:
+        fmt = struct.pack("<HHIIHH", 7, 1, 8000, 8000, 1, 8)
+        body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+        if i % 7 != 0:
+            data = bytes((5 * i + 17 * k) % 256 for k in range(8))
+            body += b"data" + struct.pack("<I", len(data)) + data
+        return b"RIFF" + struct.pack("<I", len(body)) + body
 
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
-    )
+    return _synthesize(df, id_col, encode)
 
 
 def synthesize_wav_alaw_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1457,24 +1572,16 @@ def synthesize_wav_alaw_payloads(df: DataFrame, id_col: str = "doc_id") -> DataF
     verifiable against pure SQL arithmetic. Every 6th doc gets a
     truncated container (RIFF/WAVE + fmt, no data chunk) to exercise the
     null path."""
-    import struct
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                fmt = struct.pack("<HHIIHH", 6, 1, 8000, 8000, 1, 8)
-                body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                if i % 6 != 0:
-                    data = bytes((3 * i + 29 * k) % 256 for k in range(8))
-                    body += b"data" + struct.pack("<I", len(data)) + data
-                payloads.append(b"RIFF" + struct.pack("<I", len(body)) + body)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
+    def encode(i: int) -> bytes:
+        fmt = struct.pack("<HHIIHH", 6, 1, 8000, 8000, 1, 8)
+        body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+        if i % 6 != 0:
+            data = bytes((3 * i + 29 * k) % 256 for k in range(8))
+            body += b"data" + struct.pack("<I", len(data)) + data
+        return b"RIFF" + struct.pack("<I", len(body)) + body
 
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
-    )
+    return _synthesize(df, id_col, encode)
 
 
 def synthesize_qoi_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1487,45 +1594,38 @@ def synthesize_qoi_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     exercises every 3-channel op while every pixel stays pure arithmetic
     for the oracle."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 2 + i % 5, 1 + i % 4
-                rows = []
-                for y in range(h):
-                    if (y + i) % 3 == 0:
-                        px = [(13 * i) % 256, (11 * i) % 256, (7 * i) % 256]
-                        rows.append([list(px) for _ in range(w)])
-                    elif i % 5 == 0:
-                        rows.append(
-                            [
-                                [
-                                    (i + x + y) % 256,
-                                    (2 * i + x + y) % 256,
-                                    (3 * i + x + y) % 256,
-                                ]
-                                for x in range(w)
-                            ]
-                        )
-                    else:
-                        rows.append(
-                            [
-                                [
-                                    (i + 3 * x + 7 * y) % 256,
-                                    (2 * i + 5 * x + y) % 256,
-                                    (3 * i + x + 11 * y) % 256,
-                                ]
-                                for x in range(w)
-                            ]
-                        )
-                payloads.append(PixelDecoder.encode_qoi(rows))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
+    def encode(i: int) -> bytes:
+        w, h = 2 + i % 5, 1 + i % 4
+        rows = []
+        for y in range(h):
+            if (y + i) % 3 == 0:
+                px = [(13 * i) % 256, (11 * i) % 256, (7 * i) % 256]
+                rows.append([list(px) for _ in range(w)])
+            elif i % 5 == 0:
+                rows.append(
+                    [
+                        [
+                            (i + x + y) % 256,
+                            (2 * i + x + y) % 256,
+                            (3 * i + x + y) % 256,
+                        ]
+                        for x in range(w)
+                    ]
+                )
+            else:
+                rows.append(
+                    [
+                        [
+                            (i + 3 * x + 7 * y) % 256,
+                            (2 * i + 5 * x + y) % 256,
+                            (3 * i + x + 11 * y) % 256,
+                        ]
+                        for x in range(w)
+                    ]
+                )
+        return PixelDecoder.encode_qoi(rows)
 
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
-    )
+    return _synthesize(df, id_col, encode)
 
 
 def synthesize_tiff_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1536,81 +1636,19 @@ def synthesize_tiff_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame
     WhiteIsZero (stored inverted) every third doc. Every header, IFD
     entry, and strip offset is real."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 2 + i % 6, 1 + i % 5
-                bo = "little" if i % 2 == 0 else "big"
-                photo = 0 if i % 3 == 0 else 1  # 0 = WhiteIsZero (inverted)
-                gray = bytes(
-                    (i + 5 * x + 3 * y) % 256 if photo == 1
-                    else 255 - ((i + 5 * x + 3 * y) % 256)
-                    for y in range(h)
-                    for x in range(w)
-                )
-                rps = 2
-                n_strips = (h + rps - 1) // rps
-                strip_lens = [
-                    w * min(rps, h - s * rps) for s in range(n_strips)
-                ]
-                # layout: header(8) | IFD(2 + 9*12 + 4) | [offset/count
-                # arrays when n_strips > 1] | strip data
-                ifd_off = 8
-                ifd_len = 2 + 9 * 12 + 4
-                arrays_off = ifd_off + ifd_len
-                arrays_len = 0 if n_strips == 1 else 2 * 4 * n_strips
-                data_off = arrays_off + arrays_len
-                strip_offs = []
-                o = data_off
-                for ln in strip_lens:
-                    strip_offs.append(o)
-                    o += ln
+    def encode(i: int) -> bytes:
+        w, h = 2 + i % 6, 1 + i % 5
+        photo = 0 if i % 3 == 0 else 1  # 0 = WhiteIsZero (inverted)
+        gray = bytes(
+            (i + 5 * x + 3 * y) % 256 if photo == 1
+            else 255 - ((i + 5 * x + 3 * y) % 256)
+            for y in range(h)
+            for x in range(w)
+        )
+        strips = [gray[s : s + 2 * w] for s in range(0, len(gray), 2 * w)]
+        return _tiff_gray(w, h, "little" if i % 2 == 0 else "big", photo, 1, strips)
 
-                def short_val(v: int) -> bytes:
-                    return v.to_bytes(2, bo) + b"\x00\x00"
-
-                def entry(tag: int, typ: int, cnt: int, valfield: bytes) -> bytes:
-                    return (
-                        tag.to_bytes(2, bo)
-                        + typ.to_bytes(2, bo)
-                        + cnt.to_bytes(4, bo)
-                        + valfield
-                    )
-
-                if n_strips == 1:
-                    so_field = strip_offs[0].to_bytes(4, bo)
-                    sc_field = strip_lens[0].to_bytes(4, bo)
-                else:
-                    so_field = arrays_off.to_bytes(4, bo)
-                    sc_field = (arrays_off + 4 * n_strips).to_bytes(4, bo)
-                entries = (
-                    entry(256, 3, 1, short_val(w))
-                    + entry(257, 3, 1, short_val(h))
-                    + entry(258, 3, 1, short_val(8))
-                    + entry(259, 3, 1, short_val(1))
-                    + entry(262, 3, 1, short_val(photo))
-                    + entry(273, 4, n_strips, so_field)
-                    + entry(277, 3, 1, short_val(1))
-                    + entry(278, 3, 1, short_val(rps))
-                    + entry(279, 4, n_strips, sc_field)
-                )
-                ifd = (9).to_bytes(2, bo) + entries + (0).to_bytes(4, bo)
-                header = (
-                    (b"II" + (42).to_bytes(2, "little") if bo == "little" else b"MM" + (42).to_bytes(2, "big"))
-                    + ifd_off.to_bytes(4, bo)
-                )
-                arrays = b""
-                if n_strips > 1:
-                    arrays = b"".join(v.to_bytes(4, bo) for v in strip_offs)
-                    arrays += b"".join(v.to_bytes(4, bo) for v in strip_lens)
-                payloads.append(header + ifd + arrays + gray)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
-    )
+    return _synthesize(df, id_col, encode)
 
 
 def _packbits_encode(row: bytes) -> bytes:
@@ -1642,6 +1680,57 @@ def _packbits_encode(row: bytes) -> bytes:
     return bytes(out)
 
 
+def _tiff_gray(
+    w: int, h: int, bo: str, photo: int, compression: int, strips: list, extra=()
+) -> bytes:
+    """8-bit gray TIFF around already-encoded strips of 2 rows each, byte
+    order ``bo`` ("little" = II, "big" = MM). Layout: header(8) | IFD |
+    [StripOffsets/StripByteCounts arrays when n_strips > 1] | strip data.
+    ``extra`` adds (tag, SHORT value) IFD entries."""
+    n = len(strips)
+    lens = [len(s) for s in strips]
+    arrays_off = 8 + 2 + 12 * (9 + len(extra)) + 4
+    data_off = arrays_off + (0 if n == 1 else 2 * 4 * n)
+    offs = []
+    for ln in lens:
+        offs.append(data_off)
+        data_off += ln
+
+    def short(tag: int, v: int):
+        return (tag, 3, 1, v.to_bytes(2, bo) + b"\x00\x00")
+
+    if n == 1:
+        so_field, sc_field = offs[0].to_bytes(4, bo), lens[0].to_bytes(4, bo)
+    else:
+        so_field = arrays_off.to_bytes(4, bo)
+        sc_field = (arrays_off + 4 * n).to_bytes(4, bo)
+    entries = sorted(
+        [
+            short(256, w),
+            short(257, h),
+            short(258, 8),
+            short(259, compression),
+            short(262, photo),
+            (273, 4, n, so_field),
+            short(277, 1),
+            short(278, 2),
+            (279, 4, n, sc_field),
+            *(short(tag, v) for tag, v in extra),
+        ]
+    )
+    ifd = (
+        len(entries).to_bytes(2, bo)
+        + b"".join(
+            tag.to_bytes(2, bo) + typ.to_bytes(2, bo) + cnt.to_bytes(4, bo) + val
+            for tag, typ, cnt, val in entries
+        )
+        + (0).to_bytes(4, bo)
+    )
+    header = (b"II" if bo == "little" else b"MM") + (42).to_bytes(2, bo)
+    arrays = b"" if n == 1 else b"".join(v.to_bytes(4, bo) for v in offs + lens)
+    return header + (8).to_bytes(4, bo) + ifd + arrays + b"".join(strips)
+
+
 def synthesize_tiff_packbits_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Build REAL PackBits-compressed TIFF bytes per row (Compression =
     32773): 8-bit gray, width = 3 + id%9, height = 1 + id%6,
@@ -1658,93 +1747,31 @@ def synthesize_tiff_packbits_payloads(df: DataFrame, id_col: str = "doc_id") -> 
     Docs with id%7 == 0 get a reserved -128 no-op header byte planted at
     the start of each strip stream (decoders must skip it, spec §9)."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 3 + i % 9, 1 + i % 6
-                bo = "little" if i % 2 == 0 else "big"
-                photo = 0 if i % 3 == 0 else 1  # 0 = WhiteIsZero (inverted)
+    def encode(i: int) -> bytes:
+        w, h = 3 + i % 9, 1 + i % 6
+        photo = 0 if i % 3 == 0 else 1  # 0 = WhiteIsZero (inverted)
 
-                def gray_at(x: int, y: int) -> int:
-                    if i % 3 == 0:
-                        g = (i + 7 * y) % 256
-                    elif i % 3 == 1:
-                        g = (i + 5 * x + 3 * y) % 256
-                    else:
-                        g = (i + 3 * y + x // 2) % 256
-                    return g if photo == 1 else 255 - g
+        def gray_at(x: int, y: int) -> int:
+            if i % 3 == 0:
+                g = (i + 7 * y) % 256
+            elif i % 3 == 1:
+                g = (i + 5 * x + 3 * y) % 256
+            else:
+                g = (i + 3 * y + x // 2) % 256
+            return g if photo == 1 else 255 - g
 
-                rows = [
-                    bytes(gray_at(x, y) for x in range(w)) for y in range(h)
-                ]
-                rps = 2
-                n_strips = (h + rps - 1) // rps
-                strips = []
-                for s in range(n_strips):
-                    enc = b"".join(
-                        _packbits_encode(r) for r in rows[s * rps : (s + 1) * rps]
-                    )
-                    if i % 7 == 0:
-                        enc = b"\x80" + enc  # reserved no-op header
-                    strips.append(enc)
-                strip_lens = [len(s) for s in strips]
-                ifd_off = 8
-                ifd_len = 2 + 10 * 12 + 4
-                arrays_off = ifd_off + ifd_len
-                arrays_len = 0 if n_strips == 1 else 2 * 4 * n_strips
-                data_off = arrays_off + arrays_len
-                strip_offs = []
-                o = data_off
-                for ln in strip_lens:
-                    strip_offs.append(o)
-                    o += ln
+        rows = [bytes(gray_at(x, y) for x in range(w)) for y in range(h)]
+        strips = []
+        for s in range(0, h, 2):
+            enc = b"".join(_packbits_encode(r) for r in rows[s : s + 2])
+            if i % 7 == 0:
+                enc = b"\x80" + enc  # reserved no-op header
+            strips.append(enc)
+        bo = "little" if i % 2 == 0 else "big"
+        # FillOrder (266) = 1: a benign extra entry
+        return _tiff_gray(w, h, bo, photo, 32773, strips, extra=((266, 1),))
 
-                def short_val(v: int) -> bytes:
-                    return v.to_bytes(2, bo) + b"\x00\x00"
-
-                def entry(tag: int, typ: int, cnt: int, valfield: bytes) -> bytes:
-                    return (
-                        tag.to_bytes(2, bo)
-                        + typ.to_bytes(2, bo)
-                        + cnt.to_bytes(4, bo)
-                        + valfield
-                    )
-
-                if n_strips == 1:
-                    so_field = strip_offs[0].to_bytes(4, bo)
-                    sc_field = strip_lens[0].to_bytes(4, bo)
-                else:
-                    so_field = arrays_off.to_bytes(4, bo)
-                    sc_field = (arrays_off + 4 * n_strips).to_bytes(4, bo)
-                entries = (
-                    entry(256, 3, 1, short_val(w))
-                    + entry(257, 3, 1, short_val(h))
-                    + entry(258, 3, 1, short_val(8))
-                    + entry(259, 3, 1, short_val(32773))
-                    + entry(262, 3, 1, short_val(photo))
-                    + entry(266, 3, 1, short_val(1))  # FillOrder, benign extra
-                    + entry(273, 4, n_strips, so_field)
-                    + entry(277, 3, 1, short_val(1))
-                    + entry(278, 3, 1, short_val(rps))
-                    + entry(279, 4, n_strips, sc_field)
-                )
-                ifd = (10).to_bytes(2, bo) + entries + (0).to_bytes(4, bo)
-                header = (
-                    (b"II" + (42).to_bytes(2, "little") if bo == "little" else b"MM" + (42).to_bytes(2, "big"))
-                    + ifd_off.to_bytes(4, bo)
-                )
-                arrays = b""
-                if n_strips > 1:
-                    arrays = b"".join(v.to_bytes(4, bo) for v in strip_offs)
-                    arrays += b"".join(v.to_bytes(4, bo) for v in strip_lens)
-                payloads.append(header + ifd + arrays + b"".join(strips))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
-    )
+    return _synthesize(df, id_col, encode)
 
 
 def synthesize_jpeg_lossless_payloads(
@@ -1757,35 +1784,15 @@ def synthesize_jpeg_lossless_payloads(
     the rest 8-bit (gray = (id + 5x + 3y) % 256). Lossless, so every
     decoded sample equals the closed form exactly."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 2 + i % 6, 1 + i % 5
-                pred = 1 + i % 7
-                if i % 4 == 0:
-                    gray = [
-                        [(17 * i + 5 * x + 3 * y) % 4096 for x in range(w)]
-                        for y in range(h)
-                    ]
-                    p = JpegDecoder.encode_jpeg_lossless_gray(
-                        gray, precision=12, predictor=pred
-                    )
-                else:
-                    gray = [
-                        [(i + 5 * x + 3 * y) % 256 for x in range(w)]
-                        for y in range(h)
-                    ]
-                    p = JpegDecoder.encode_jpeg_lossless_gray(
-                        gray, precision=8, predictor=pred
-                    )
-                payloads.append(p)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
+    def encode(i: int) -> bytes:
+        w, h = 2 + i % 6, 1 + i % 5
+        precision, base, mod = (12, 17 * i, 4096) if i % 4 == 0 else (8, i, 256)
+        gray = [[(base + 5 * x + 3 * y) % mod for x in range(w)] for y in range(h)]
+        return JpegDecoder.encode_jpeg_lossless_gray(
+            gray, precision=precision, predictor=1 + i % 7
+        )
 
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
-    )
+    return _synthesize(df, id_col, encode)
 
 
 def synthesize_bmp_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1797,28 +1804,8 @@ def synthesize_bmp_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     operators (decode/resize/features) are verifiable against closed-form
     oracles with no codec library anywhere."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 2 + i % 6, 1 + i % 5
-                rows = [
-                    [
-                        [
-                            (i + 3 * x + 7 * y) % 256,
-                            (2 * i + 5 * x + y) % 256,
-                            (3 * i + x + 11 * y) % 256,
-                        ]
-                        for x in range(w)
-                    ]
-                    for y in range(h)
-                ]
-                payloads.append(PixelDecoder.encode_bmp(rows))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
+    return _synthesize(
+        df, id_col, lambda i: PixelDecoder.encode_bmp(_closed_form_rows(i))
     )
 
 
@@ -1839,93 +1826,69 @@ def synthesize_bmp_rle8_payloads(df: DataFrame, id_col: str = "doc_id") -> DataF
     closed-form oracle indexes the decoded top-down raster at
     y_top = h - 1 - y."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 4 + i % 8, 1 + i % 5
-                cls = i % 4
-                stream = bytearray()
-                for y in range(h):  # bottom-up storage rows
-                    if cls == 0:
-                        stream += bytes([w, (i + 9 * y) % 256])
-                    elif cls == 1:
-                        px = bytes((i + 5 * x + 3 * y) % 256 for x in range(w))
-                        stream += bytes([0, w]) + px
-                        if w & 1:
-                            stream += b"\x00"
-                    elif cls == 2:
-                        x = 0
-                        while x < w:
-                            n = min(2, w - x)
-                            stream += bytes([n, (i + 3 * y + x // 2) % 256])
-                            x += n
-                    else:
-                        stream += bytes([1, (i + 11 * y) % 256])
-                        stream += bytes([0, 2, 2, 0])  # delta: skip x=1..2
-                        rest = bytes(
-                            (i + 7 * x + 3 * y) % 256 for x in range(3, w)
-                        )
-                        if len(rest) >= 3:
-                            stream += bytes([0, len(rest)]) + rest
-                            if len(rest) & 1:
-                                stream += b"\x00"
-                        else:
-                            for b in rest:
-                                stream += bytes([1, b])
-                    stream += b"\x00\x00" if y < h - 1 else b"\x00\x01"
-                palette = b"".join(bytes([j, j, j, 0]) for j in range(256))
-                data_off = 14 + 40 + len(palette)
-                header = (
-                    b"BM"
-                    + (data_off + len(stream)).to_bytes(4, "little")
-                    + b"\x00\x00\x00\x00"
-                    + data_off.to_bytes(4, "little")
-                )
-                dib = (
-                    (40).to_bytes(4, "little")
-                    + w.to_bytes(4, "little", signed=True)
-                    + h.to_bytes(4, "little", signed=True)  # positive: bottom-up
-                    + (1).to_bytes(2, "little")
-                    + (8).to_bytes(2, "little")
-                    + (1).to_bytes(4, "little")  # BI_RLE8
-                    + len(stream).to_bytes(4, "little")
-                    + (2835).to_bytes(4, "little")
-                    + (2835).to_bytes(4, "little")
-                    + (256).to_bytes(4, "little")
-                    + (0).to_bytes(4, "little")
-                )
-                payloads.append(header + dib + palette + bytes(stream))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
-    )
-
-
-def _pixel_stats_op(decoder, payload_col: str = "payload", id_col: str = "doc_id"):
-    """Batch-level pixel_stats seam: (id, payload) batches → (id, width,
-    height, px_sum) batches. Factored out so the fused synth+decode stage
-    composes the SAME decode function the standalone operator runs —
-    the codec seam is the batch function, not the physical stage."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {id_col: pdf[id_col].values, "width": [], "height": [], "px_sum": []}
-            for p in pdf[payload_col]:
-                img = None if p is None else decoder.decode_pixels_arr(bytes(p))
-                if img is None:
-                    out["width"].append(None)
-                    out["height"].append(None)
-                    out["px_sum"].append(None)
+    def encode(i: int) -> bytes:
+        w, h = 4 + i % 8, 1 + i % 5
+        cls = i % 4
+        stream = bytearray()
+        for y in range(h):  # bottom-up storage rows
+            if cls == 0:
+                stream += bytes([w, (i + 9 * y) % 256])
+            elif cls == 1:
+                px = bytes((i + 5 * x + 3 * y) % 256 for x in range(w))
+                stream += bytes([0, w]) + px
+                if w & 1:
+                    stream += b"\x00"
+            elif cls == 2:
+                x = 0
+                while x < w:
+                    n = min(2, w - x)
+                    stream += bytes([n, (i + 3 * y + x // 2) % 256])
+                    x += n
+            else:
+                stream += bytes([1, (i + 11 * y) % 256])
+                stream += bytes([0, 2, 2, 0])  # delta: skip x=1..2
+                rest = bytes((i + 7 * x + 3 * y) % 256 for x in range(3, w))
+                if len(rest) >= 3:
+                    stream += bytes([0, len(rest)]) + rest
+                    if len(rest) & 1:
+                        stream += b"\x00"
                 else:
-                    out["width"].append(img["width"])
-                    out["height"].append(img["height"])
-                    out["px_sum"].append(int(img["arr"].sum()))
-            yield pd.DataFrame(out)
+                    for b in rest:
+                        stream += bytes([1, b])
+            stream += b"\x00\x00" if y < h - 1 else b"\x00\x01"
+        palette = b"".join(bytes([j, j, j, 0]) for j in range(256))
+        data_off = 14 + 40 + len(palette)
+        header = (
+            b"BM"
+            + (data_off + len(stream)).to_bytes(4, "little")
+            + b"\x00\x00\x00\x00"
+            + data_off.to_bytes(4, "little")
+        )
+        dib = (
+            (40).to_bytes(4, "little")
+            + w.to_bytes(4, "little", signed=True)
+            + h.to_bytes(4, "little", signed=True)  # positive: bottom-up
+            + (1).to_bytes(2, "little")
+            + (8).to_bytes(2, "little")
+            + (1).to_bytes(4, "little")  # BI_RLE8
+            + len(stream).to_bytes(4, "little")
+            + (2835).to_bytes(4, "little")
+            + (2835).to_bytes(4, "little")
+            + (256).to_bytes(4, "little")
+            + (0).to_bytes(4, "little")
+        )
+        return header + dib + palette + bytes(stream)
 
-    return op
+    return _synthesize(df, id_col, encode)
+
+
+_PIXEL_STATS_DDL = "width int, height int, px_sum bigint"
+
+
+def _pixel_stats_fn(decoder):
+    """pixel_stats' per-payload fn, shared with the fused synth+decode
+    stage so both run the same decode."""
+    return _decoded_pixels(decoder, lambda arr: int(arr.sum()))
 
 
 def pixel_stats(
@@ -1933,13 +1896,9 @@ def pixel_stats(
 ) -> DataFrame:
     """Decode REAL raster pixels (PixelDecoder tier) and aggregate per
     payload: dimensions plus the total of all channel bytes. Undecodable
-    payloads yield nulls. Arrow-batched; payload bytes never shuffle."""
-    decoder = decoder or PixelDecoder()
-
-    return df.select(id_col, payload_col).mapInPandas(
-        _pixel_stats_op(decoder, payload_col, id_col),
-        _id_field(df, id_col) + ", width int, height int, px_sum bigint",
-    )
+    payloads yield nulls."""
+    fn = _pixel_stats_fn(decoder or PixelDecoder())
+    return _map_payloads(df, payload_col, id_col, fn, _PIXEL_STATS_DDL)
 
 
 def pixel_fingerprints(
@@ -1948,36 +1907,15 @@ def pixel_fingerprints(
     """Container-invariant image fingerprint: md5 of the DECODED raster's
     hex string (per-pixel B,G,R bytes, row-major top-down) — the same
     image stored as BMP, PNG, or GIF hashes identically, so image dedup
-    keys on content, not encoding. Arrow-batched narrow map; undecodable
-    payloads yield null fingerprints."""
-    import hashlib
+    keys on content, not encoding. Undecodable payloads yield null
+    fingerprints."""
 
-    decoder = decoder or PixelDecoder()
+    def fingerprint(arr) -> str:
+        return hashlib.md5(arr.astype("uint8").tobytes().hex().encode()).hexdigest()
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                id_col: pdf[id_col].values,
-                "width": [],
-                "height": [],
-                "pixel_fp": [],
-            }
-            for p in pdf[payload_col]:
-                img = None if p is None else decoder.decode_pixels_arr(bytes(p))
-                if img is None:
-                    out["width"].append(None)
-                    out["height"].append(None)
-                    out["pixel_fp"].append(None)
-                else:
-                    hexes = img["arr"].astype("uint8").tobytes().hex()
-                    out["width"].append(img["width"])
-                    out["height"].append(img["height"])
-                    out["pixel_fp"].append(hashlib.md5(hexes.encode()).hexdigest())
-            yield pd.DataFrame(out)
-
-    # id field name/type follow the input schema (r2 advisor finding)
-    return df.select(id_col, payload_col).mapInPandas(
-        op, _id_field(df, id_col) + ", width int, height int, pixel_fp string"
+    fn = _decoded_pixels(decoder or PixelDecoder(), fingerprint)
+    return _map_payloads(
+        df, payload_col, id_col, fn, "width int, height int, pixel_fp string"
     )
 
 
@@ -2012,35 +1950,12 @@ def phash_fingerprints(
 ) -> DataFrame:
     """(id, width, height, phash): perceptual hashes of decoded payloads —
     near-duplicate images (re-encoded, brightness-shifted) collide where
-    byte and exact-pixel hashes differ. Narrow Arrow map; downstream
-    grouping (exact) or band-bucketing (Hamming, as in SimHash) keys on
-    the 8-byte hash only."""
-    decoder = decoder or PixelDecoder()
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                id_col: pdf[id_col].values,
-                "width": [],
-                "height": [],
-                "phash": [],
-            }
-            for p in pdf[payload_col]:
-                img = None if p is None else decoder.decode_pixels_arr(bytes(p))
-                if img is None:
-                    out["width"].append(None)
-                    out["height"].append(None)
-                    out["phash"].append(None)
-                else:
-                    out["width"].append(img["width"])
-                    out["height"].append(img["height"])
-                    # 63 coefficient bits (8x8 low band minus DC) — always
-                    # fits a signed Spark long as-is
-                    out["phash"].append(phash64(img["arr"]))
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, payload_col).mapInPandas(
-        op, _id_field(df, id_col) + ", width int, height int, phash bigint"
+    byte and exact-pixel hashes differ. Downstream grouping (exact) or
+    band-bucketing (Hamming, as in SimHash) keys on the 8-byte hash only;
+    its 63 coefficient bits always fit a signed Spark long as-is."""
+    fn = _decoded_pixels(decoder or PixelDecoder(), phash64)
+    return _map_payloads(
+        df, payload_col, id_col, fn, "width int, height int, phash bigint"
     )
 
 
@@ -2133,35 +2048,14 @@ def ahash_fingerprints(
     df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id", decoder=None
 ) -> DataFrame:
     """(id, width, height, ahash): integer average-hashes of decoded
-    payloads — same narrow Arrow-map shape and near-dup banding contract
-    as phash_fingerprints, but every step is integer arithmetic, so the
+    payloads — same shape and near-dup banding contract as
+    phash_fingerprints, but every step is integer arithmetic, so the
     full decode -> hash -> band -> pair pipeline is DuckDB-hash-checkable
     (multimodal_ahash_neardup) where the DCT pHash can only be
     numpy-goldened."""
-    decoder = decoder or PixelDecoder()
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                id_col: pdf[id_col].values,
-                "width": [],
-                "height": [],
-                "ahash": [],
-            }
-            for p in pdf[payload_col]:
-                img = None if p is None else decoder.decode_pixels_arr(bytes(p))
-                if img is None:
-                    out["width"].append(None)
-                    out["height"].append(None)
-                    out["ahash"].append(None)
-                else:
-                    out["width"].append(img["width"])
-                    out["height"].append(img["height"])
-                    out["ahash"].append(ahash63(img["arr"]))
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, payload_col).mapInPandas(
-        op, _id_field(df, id_col) + ", width int, height int, ahash bigint"
+    fn = _decoded_pixels(decoder or PixelDecoder(), ahash63)
+    return _map_payloads(
+        df, payload_col, id_col, fn, "width int, height int, ahash bigint"
     )
 
 
@@ -2235,33 +2129,12 @@ def phash_int_fingerprints(
     df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id", decoder=None
 ) -> DataFrame:
     """(id, width, height, phash): integer-DCT perceptual hashes — same
-    narrow Arrow-map shape and banding contract as phash_fingerprints,
-    but hash-exact across engines (multimodal_phash_int), closing the
-    gap the float DCT left goldened-only."""
-    decoder = decoder or PixelDecoder()
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                id_col: pdf[id_col].values,
-                "width": [],
-                "height": [],
-                "phash": [],
-            }
-            for p in pdf[payload_col]:
-                img = None if p is None else decoder.decode_pixels_arr(bytes(p))
-                if img is None:
-                    out["width"].append(None)
-                    out["height"].append(None)
-                    out["phash"].append(None)
-                else:
-                    out["width"].append(img["width"])
-                    out["height"].append(img["height"])
-                    out["phash"].append(phash63_int(img["arr"]))
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, payload_col).mapInPandas(
-        op, _id_field(df, id_col) + ", width int, height int, phash bigint"
+    shape and banding contract as phash_fingerprints, but hash-exact
+    across engines (multimodal_phash_int), closing the gap the float DCT
+    left goldened-only."""
+    fn = _decoded_pixels(decoder or PixelDecoder(), phash63_int)
+    return _map_payloads(
+        df, payload_col, id_col, fn, "width int, height int, phash bigint"
     )
 
 
@@ -2276,26 +2149,19 @@ def synthesize_noise_pair_payloads(df: DataFrame, id_col: str = "doc_id") -> Dat
     exactly that way: sawtooth DCTs put half the coefficients in an
     exact tie at the median; measured in-pair Hamming up to 30/64)."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                s = (i // 2) * 2654435761 % (2**32)
-                off = 8 * (i % 2)
-                rows = []
-                for _y in range(16):
-                    row = []
-                    for _x in range(24):
-                        s = (s * 1103515245 + 12345) % (2**31)
-                        row.append([40 + (s >> 16) % 160 + off] * 3)
-                    rows.append(row)
-                payloads.append(PixelDecoder.encode_png(rows))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
+    def encode(i: int) -> bytes:
+        s = (i // 2) * 2654435761 % (2**32)
+        off = 8 * (i % 2)
+        rows = []
+        for _y in range(16):
+            row = []
+            for _x in range(24):
+                s = (s * 1103515245 + 12345) % (2**31)
+                row.append([40 + (s >> 16) % 160 + off] * 3)
+            rows.append(row)
+        return PixelDecoder.encode_png(rows)
 
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
-    )
+    return _synthesize(df, id_col, encode)
 
 
 def encode_mp4(
@@ -2451,26 +2317,17 @@ def synthesize_mp4_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     16·(1 + id%4), tracks = 1 + id%2 — a driver oracle verifies the box
     walk against pure arithmetic."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                ts = 1000 * (1 + i % 3)
-                payloads.append(
-                    encode_mp4(
-                        width=16 * (1 + i % 5),
-                        height=16 * (1 + i % 4),
-                        timescale=ts,
-                        duration=ts * (1 + i % 9),
-                        n_tracks=1 + i % 2,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
+    def encode(i: int) -> bytes:
+        ts = 1000 * (1 + i % 3)
+        return encode_mp4(
+            width=16 * (1 + i % 5),
+            height=16 * (1 + i % 4),
+            timescale=ts,
+            duration=ts * (1 + i % 9),
+            n_tracks=1 + i % 2,
+        )
 
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
-    )
+    return _synthesize(df, id_col, encode)
 
 
 def synthesize_mp4_stsd_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -2479,42 +2336,33 @@ def synthesize_mp4_stsd_payloads(df: DataFrame, id_col: str = "doc_id") -> DataF
     timescale 600·(1 + id%3)) plus an audio track ('mp4a') iff id%3 == 0
     — a driver oracle verifies the stbl walk by pure arithmetic."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                tables = [
-                    {
-                        "handler": "vide",
-                        "codec": "avc1" if i % 2 == 0 else "hev1",
-                        "n_frames": 12 * (1 + i % 4),
-                        "media_timescale": 600 * (1 + i % 3),
-                    }
-                ]
-                if i % 3 == 0:
-                    tables.append(
-                        {
-                            "handler": "soun",
-                            "codec": "mp4a",
-                            "n_frames": 48 * (1 + i % 4),
-                            "media_timescale": 44100,
-                        }
-                    )
-                payloads.append(
-                    encode_mp4(
-                        width=16 * (1 + i % 5),
-                        height=16 * (1 + i % 4),
-                        timescale=1000,
-                        duration=1000 * (1 + i % 9),
-                        sample_tables=tables,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
+    def encode(i: int) -> bytes:
+        tables = [
+            {
+                "handler": "vide",
+                "codec": "avc1" if i % 2 == 0 else "hev1",
+                "n_frames": 12 * (1 + i % 4),
+                "media_timescale": 600 * (1 + i % 3),
+            }
+        ]
+        if i % 3 == 0:
+            tables.append(
+                {
+                    "handler": "soun",
+                    "codec": "mp4a",
+                    "n_frames": 48 * (1 + i % 4),
+                    "media_timescale": 44100,
+                }
+            )
+        return encode_mp4(
+            width=16 * (1 + i % 5),
+            height=16 * (1 + i % 4),
+            timescale=1000,
+            duration=1000 * (1 + i % 9),
+            sample_tables=tables,
+        )
 
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
-    )
+    return _synthesize(df, id_col, encode)
 
 
 def synthesize_mp4_fps_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -2525,36 +2373,27 @@ def synthesize_mp4_fps_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFr
     different non-trivial rational per document; a driver oracle verifies
     the stts walk by pure arithmetic."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                c1, d1 = 8 * (1 + i % 3), 20 + 10 * (i % 4)
-                c2, d2 = 4 * (1 + i % 2), 25
-                tables = [
-                    {
-                        "handler": "vide",
-                        "codec": "avc1" if i % 2 == 0 else "hev1",
-                        "n_frames": c1 + c2,
-                        "media_timescale": 600 * (1 + i % 3),
-                        "stts_runs": [(c1, d1), (c2, d2)],
-                    }
-                ]
-                payloads.append(
-                    encode_mp4(
-                        width=32,
-                        height=32,
-                        timescale=1000,
-                        duration=1000,
-                        sample_tables=tables,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
+    def encode(i: int) -> bytes:
+        c1, d1 = 8 * (1 + i % 3), 20 + 10 * (i % 4)
+        c2, d2 = 4 * (1 + i % 2), 25
+        tables = [
+            {
+                "handler": "vide",
+                "codec": "avc1" if i % 2 == 0 else "hev1",
+                "n_frames": c1 + c2,
+                "media_timescale": 600 * (1 + i % 3),
+                "stts_runs": [(c1, d1), (c2, d2)],
+            }
+        ]
+        return encode_mp4(
+            width=32,
+            height=32,
+            timescale=1000,
+            duration=1000,
+            sample_tables=tables,
+        )
 
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
-    )
+    return _synthesize(df, id_col, encode)
 
 
 def decode_video_sample_tables(
@@ -2568,35 +2407,21 @@ def decode_video_sample_tables(
     via the REAL stbl walk (trak → mdia → mdhd/hdlr/minf → stbl →
     stsd/stsz) — the codec-allowlist / frame-budget filter columns a
     100 TB video pipeline prunes on before ever touching media bytes.
-    Narrow Arrow map; payloads never shuffle.
 
     ``include_timing=True`` appends video_stts_duration (Σ count·delta
     over the stts run table, media ticks) — the denominator of real fps.
     Opt-in so the original column set stays schema-stable."""
-    decoder = decoder or HeaderDecoder()
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("video_codec", "audio_codec", "n_video_frames", "video_timescale")
-        if include_timing:
-            cols = cols + ("video_stts_duration",)
-        for pdf in batches:
-            out = {id_col: pdf[id_col].values, **{c: [] for c in cols}}
-            for p in pdf[payload_col]:
-                meta = None if p is None else decoder.sniff_video_tracks(bytes(p))
-                for c in cols:
-                    out[c].append(None if meta is None else meta[c])
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, payload_col).mapInPandas(
-        op,
-        # bigint, not int: stsz sample_count and mdhd timescale are
-        # UNSIGNED 32-bit per the spec — a real container with values
-        # >= 2^31 would overflow an int32 Arrow cast and fail the task,
-        # violating corrupt-payload-never-fails-the-batch (ADVICE r3)
-        _id_field(df, id_col) + ", video_codec string, audio_codec string, "
+    # bigint, not int: stsz sample_count and mdhd timescale are
+    # UNSIGNED 32-bit per the spec — a real container with values
+    # >= 2^31 would overflow an int32 Arrow cast and fail the task,
+    # violating corrupt-payload-never-fails-the-batch (ADVICE r3)
+    fields = (
+        "video_codec string, audio_codec string, "
         "n_video_frames bigint, video_timescale bigint"
-        + (", video_stts_duration bigint" if include_timing else ""),
+        + (", video_stts_duration bigint" if include_timing else "")
     )
+    fn = _sniffed_fields((decoder or HeaderDecoder()).sniff_video_tracks, fields)
+    return _map_payloads(df, payload_col, id_col, fn, fields)
 
 
 def synthesize_jpeg_jfif_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -2607,26 +2432,11 @@ def synthesize_jpeg_jfif_payloads(df: DataFrame, id_col: str = "doc_id") -> Data
     The raster is the flat-gray fixture so the payloads stay real,
     decodable JPEGs end to end."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                jfif = (
-                    None
-                    if i % 3 == 0
-                    else (i % 3, 72 + i % 120, 72 + (7 * i) % 120)
-                )
-                payloads.append(
-                    JpegDecoder.encode_jpeg_gray(
-                        [[(37 * i + 11) % 256] * 8] * 8, jfif=jfif
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
+    def encode(i: int) -> bytes:
+        jfif = None if i % 3 == 0 else (i % 3, 72 + i % 120, 72 + (7 * i) % 120)
+        return JpegDecoder.encode_jpeg_gray([[(37 * i + 11) % 256] * 8] * 8, jfif=jfif)
 
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
-    )
+    return _synthesize(df, id_col, encode)
 
 
 def decode_jfif_metadata(
@@ -2635,49 +2445,25 @@ def decode_jfif_metadata(
     """(id, version_major, version_minor, units, xdensity, ydensity) via
     the REAL APP0/JFIF marker walk — the pixel-density prune columns a
     print/scan corpus filters on; JPEGs without a JFIF segment yield
-    NULL fields. Narrow Arrow map; payloads never shuffle."""
-    decoder = decoder or HeaderDecoder()
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("version_major", "version_minor", "units", "xdensity", "ydensity")
-        for pdf in batches:
-            out = {id_col: pdf[id_col].values, **{c: [] for c in cols}}
-            for p in pdf[payload_col]:
-                meta = None if p is None else decoder.sniff_jfif(bytes(p))
-                for c in cols:
-                    out[c].append(None if meta is None else meta[c])
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, payload_col).mapInPandas(
-        op,
-        _id_field(df, id_col) + ", version_major int, version_minor int, "
-        "units int, xdensity int, ydensity int",
+    NULL fields."""
+    fields = (
+        "version_major int, version_minor int, units int, xdensity int, ydensity int"
     )
+    fn = _sniffed_fields((decoder or HeaderDecoder()).sniff_jfif, fields)
+    return _map_payloads(df, payload_col, id_col, fn, fields)
 
 
 def decode_video_metadata(
     df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id", decoder=None
 ) -> DataFrame:
     """(id, format, width, height, duration_ms, timescale, n_tracks) via
-    the REAL ISO-BMFF box walker; unrecognized payloads yield nulls.
-    Narrow Arrow map — payload bytes never shuffle."""
-    decoder = decoder or HeaderDecoder()
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("format", "width", "height", "duration_ms", "timescale", "n_tracks")
-        for pdf in batches:
-            out = {id_col: pdf[id_col].values, **{c: [] for c in cols}}
-            for p in pdf[payload_col]:
-                meta = None if p is None else decoder.sniff_video(bytes(p))
-                for c in cols:
-                    out[c].append(None if meta is None else meta[c])
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, payload_col).mapInPandas(
-        op,
-        _id_field(df, id_col) + ", format string, width int, height int, "
-        "duration_ms bigint, timescale int, n_tracks int",
+    the REAL ISO-BMFF box walker; unrecognized payloads yield nulls."""
+    fields = (
+        "format string, width int, height int, "
+        "duration_ms bigint, timescale int, n_tracks int"
     )
+    fn = _sniffed_fields((decoder or HeaderDecoder()).sniff_video, fields)
+    return _map_payloads(df, payload_col, id_col, fn, fields)
 
 
 def audio_fingerprints(
@@ -2687,31 +2473,21 @@ def audio_fingerprints(
     normalize each to 8-bit significance (integer shift by bits-8 — exact,
     no float), and md5 the comma-joined values. The same waveform stored
     at 8/16/24-bit depths hashes identically, so audio dedup keys on the
-    signal, not the container encoding. Narrow Arrow map."""
-    import hashlib
-
+    signal, not the container encoding."""
     decoder = decoder or PixelDecoder()
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {id_col: pdf[id_col].values, "n_samples": [], "audio_fp": []}
-            for p in pdf[payload_col]:
-                payload = b"" if p is None else bytes(p)
-                meta = decoder.sniff_audio(payload)
-                samples = decoder.decode_audio_samples(payload)
-                if meta is None or samples is None:
-                    out["n_samples"].append(None)
-                    out["audio_fp"].append(None)
-                else:
-                    shift = meta["bits_per_sample"] - 8
-                    norm = [v >> shift if shift else v for v in samples]
-                    key = ",".join(str(v) for v in norm)
-                    out["n_samples"].append(len(samples))
-                    out["audio_fp"].append(hashlib.md5(key.encode()).hexdigest())
-            yield pd.DataFrame(out)
+    def fn(p):
+        p = p or b""
+        meta = decoder.sniff_audio(p)
+        samples = decoder.decode_audio_samples(p)
+        if meta is None or samples is None:
+            return None
+        shift = meta["bits_per_sample"] - 8
+        key = ",".join(str(v >> shift if shift else v) for v in samples)
+        return len(samples), hashlib.md5(key.encode()).hexdigest()
 
-    return df.select(id_col, payload_col).mapInPandas(
-        op, _id_field(df, id_col) + ", n_samples int, audio_fp string"
+    return _map_payloads(
+        df, payload_col, id_col, fn, "n_samples int, audio_fp string"
     )
 
 
@@ -2721,39 +2497,29 @@ def synthesize_multidepth_wav_payloads(df: DataFrame, id_col: str = "doc_id") ->
     DIFFERENT bit depth — 8-bit unsigned (128+s), 16-bit signed (s·256),
     24-bit signed (s·65536) by doc_id % 3. Byte hashing sees three
     payloads; depth-normalized sample hashing sees one signal."""
-    import struct
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                grp = i // 3
-                bits = 8 * (1 + i % 3)
-                vals = [(11 * grp + 17 * k) % 200 - 100 for k in range(16)]
-                if bits == 8:
-                    data = bytes(128 + v for v in vals)
-                elif bits == 16:
-                    data = b"".join(
-                        (v * 256).to_bytes(2, "little", signed=True) for v in vals
-                    )
-                else:
-                    data = b"".join(
-                        (v * 65536).to_bytes(3, "little", signed=True) for v in vals
-                    )
-                block = bits // 8
-                fmt = struct.pack("<HHIIHH", 1, 1, 8000, 8000 * block, block, bits)
-                body = (
-                    b"WAVE"
-                    + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                    + b"data" + struct.pack("<I", len(data)) + data
-                )
-                payloads.append(b"RIFF" + struct.pack("<I", len(body)) + body)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
+    def encode(i: int) -> bytes:
+        grp = i // 3
+        bits = 8 * (1 + i % 3)
+        vals = [(11 * grp + 17 * k) % 200 - 100 for k in range(16)]
+        if bits == 8:
+            data = bytes(128 + v for v in vals)
+        elif bits == 16:
+            data = b"".join((v * 256).to_bytes(2, "little", signed=True) for v in vals)
+        else:
+            data = b"".join(
+                (v * 65536).to_bytes(3, "little", signed=True) for v in vals
+            )
+        block = bits // 8
+        fmt = struct.pack("<HHIIHH", 1, 1, 8000, 8000 * block, block, bits)
+        body = (
+            b"WAVE"
+            + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+            + b"data" + struct.pack("<I", len(data)) + data
+        )
+        return b"RIFF" + struct.pack("<I", len(body)) + body
 
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
-    )
+    return _synthesize(df, id_col, encode)
 
 
 def synthesize_multiformat_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -2764,27 +2530,20 @@ def synthesize_multiformat_payloads(df: DataFrame, id_col: str = "doc_id") -> Da
     container-invariant dedup: byte-level hashing sees three distinct
     payloads, pixel-level hashing sees one image."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                grp = i // 3
-                w, h = 2 + grp % 5, 1 + grp % 4
-                r, g, b = (41 * grp + 7) % 256, (83 * grp + 29) % 256, (29 * grp + 171) % 256
-                rows = [[[b, g, r]] * w for _ in range(h)]
-                fmt = i % 3
-                if fmt == 0:
-                    payloads.append(PixelDecoder.encode_bmp(rows))
-                elif fmt == 1:
-                    payloads.append(PixelDecoder.encode_png(rows))
-                else:
-                    payloads.append(GifDecoder.encode_gif(rows))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
+    def encode(i: int) -> bytes:
+        grp = i // 3
+        w, h = 2 + grp % 5, 1 + grp % 4
+        r, g, b = (41 * grp + 7) % 256, (83 * grp + 29) % 256, (29 * grp + 171) % 256
+        rows = [[[b, g, r]] * w for _ in range(h)]
+        fmt = i % 3
+        if fmt == 0:
+            return PixelDecoder.encode_bmp(rows)
+        elif fmt == 1:
+            return PixelDecoder.encode_png(rows)
+        else:
+            return GifDecoder.encode_gif(rows)
 
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
-    )
+    return _synthesize(df, id_col, encode)
 
 
 def audio_sample_stats(
@@ -2794,31 +2553,16 @@ def audio_sample_stats(
     sample count, sum, min, max. Non-PCM payloads yield nulls."""
     decoder = decoder or PixelDecoder()
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                id_col: pdf[id_col].values,
-                "n_samples": [],
-                "sample_sum": [],
-                "sample_min": [],
-                "sample_max": [],
-            }
-            for p in pdf[payload_col]:
-                vals = None if p is None else decoder.decode_audio_samples(bytes(p))
-                if not vals:
-                    for k in ("n_samples", "sample_sum", "sample_min", "sample_max"):
-                        out[k].append(None)
-                else:
-                    out["n_samples"].append(len(vals))
-                    out["sample_sum"].append(sum(vals))
-                    out["sample_min"].append(min(vals))
-                    out["sample_max"].append(max(vals))
-            yield pd.DataFrame(out)
+    def fn(p):
+        vals = None if p is None else decoder.decode_audio_samples(p)
+        return (len(vals), sum(vals), min(vals), max(vals)) if vals else None
 
-    return df.select(id_col, payload_col).mapInPandas(
-        op,
-        _id_field(df, id_col)
-        + ", n_samples bigint, sample_sum bigint, sample_min bigint, sample_max bigint",
+    return _map_payloads(
+        df,
+        payload_col,
+        id_col,
+        fn,
+        "n_samples bigint, sample_sum bigint, sample_min bigint, sample_max bigint",
     )
 
 
@@ -2828,36 +2572,12 @@ def synthesize_png_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     16 + (7·id)%64, color type cycling 0/2/4/6. IDAT carries a minimal
     zlib stream — header parsing never reads it, and keeping it tiny makes
     the synthesis O(1) per row regardless of nominal dimensions."""
-    import struct
-    import zlib
 
-    def chunk(tag: bytes, body: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(body))
-            + tag
-            + body
-            + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF)
-        )
+    def encode(i: int) -> bytes:
+        w, h = 16 + i % 64, 16 + (7 * i) % 64
+        return _png_bytes(w, h, b"", color_type=(0, 2, 4, 6)[i % 4])
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 16 + i % 64, 16 + (7 * i) % 64
-                color_type = (0, 2, 4, 6)[i % 4]
-                ihdr = struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, 0)
-                payloads.append(
-                    b"\x89PNG\r\n\x1a\n"
-                    + chunk(b"IHDR", ihdr)
-                    + chunk(b"IDAT", zlib.compress(b""))
-                    + chunk(b"IEND", b"")
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
-    )
+    return _synthesize(df, id_col, encode)
 
 
 def synthesize_png_raster_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -2868,69 +2588,17 @@ def synthesize_png_raster_payloads(df: DataFrame, id_col: str = "doc_id") -> Dat
     PNG whose scanline y is FORWARD-FILTERED with type (id+y) % 5. Every
     decode therefore exercises zlib inflate plus all five spec filters
     (None/Sub/Up/Average/Paeth), not just the trivial path."""
-    import struct
-    import zlib
 
-    def chunk(tag: bytes, body: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(body))
-            + tag
-            + body
-            + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF)
-        )
+    def encode(i: int) -> bytes:
+        rows = _closed_form_rows(i)
+        raw, prior = bytearray(), bytes(3 * len(rows[0]))
+        for y, row in enumerate(rows):
+            line = bytes(c for px in row for c in px[::-1])  # RGB on the wire
+            raw += _png_filter(line, prior, (i + y) % 5)
+            prior = line
+        return _png_bytes(len(rows[0]), len(rows), raw)
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 2 + i % 6, 1 + i % 5
-                stride = w * 3
-                raw = bytearray()
-                prior = bytearray(stride)
-                for y in range(h):
-                    # RGB byte order on the wire; formula is [B,G,R]
-                    line = bytearray()
-                    for x in range(w):
-                        line += bytes(
-                            (
-                                (3 * i + x + 11 * y) % 256,  # R
-                                (2 * i + 5 * x + y) % 256,  # G
-                                (i + 3 * x + 7 * y) % 256,  # B
-                            )
-                        )
-                    ft = (i + y) % 5
-                    out = bytearray(stride)
-                    for k in range(stride):
-                        a = line[k - 3] if k >= 3 else 0
-                        b = prior[k]
-                        c = prior[k - 3] if k >= 3 else 0
-                        if ft == 0:
-                            pred = 0
-                        elif ft == 1:
-                            pred = a
-                        elif ft == 2:
-                            pred = b
-                        elif ft == 3:
-                            pred = (a + b) >> 1
-                        else:
-                            pred = PixelDecoder._paeth(a, b, c)
-                        out[k] = (line[k] - pred) & 0xFF
-                    raw.append(ft)
-                    raw += out
-                    prior = line
-                ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-                payloads.append(
-                    b"\x89PNG\r\n\x1a\n"
-                    + chunk(b"IHDR", ihdr)
-                    + chunk(b"IDAT", zlib.compress(bytes(raw)))
-                    + chunk(b"IEND", b"")
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
-    )
+    return _synthesize(df, id_col, encode)
 
 
 # Adam7 pass geometry (PNG spec §8.2): (x0, dx, y0, dy) per pass 1..7.
@@ -2949,75 +2617,23 @@ def synthesize_png_adam7_payloads(df: DataFrame, id_col: str = "doc_id") -> Data
     type (id + y_sub) % 5 against the PASS's own prior line — so a decode
     exercises the full Adam7 reassembly scatter plus all five filters
     restarting per pass."""
-    import struct
-    import zlib
 
-    def chunk(tag: bytes, body: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(body))
-            + tag
-            + body
-            + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF)
-        )
+    def encode(i: int) -> bytes:
+        rows = _closed_form_rows(i)
+        h, w = len(rows), len(rows[0])
+        raw = bytearray()
+        for x0, dx, y0, dy in ADAM7_PASSES:
+            xs, ys = range(x0, w, dx), range(y0, h, dy)
+            if not xs or not ys:
+                continue  # spec: empty passes contribute no bytes
+            prior = bytes(3 * len(xs))
+            for y_sub, y in enumerate(ys):
+                line = bytes(c for x in xs for c in rows[y][x][::-1])  # RGB
+                raw += _png_filter(line, prior, (i + y_sub) % 5)
+                prior = line
+        return _png_bytes(w, h, raw, interlace=1)
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 2 + i % 6, 1 + i % 5
-                raw = bytearray()
-                for x0, dx, y0, dy in ADAM7_PASSES:
-                    pw = (w - x0 + dx - 1) // dx
-                    ph = (h - y0 + dy - 1) // dy
-                    if pw <= 0 or ph <= 0:
-                        continue  # spec: empty passes contribute no bytes
-                    stride = pw * 3
-                    prior = bytearray(stride)
-                    for y_sub in range(ph):
-                        y = y0 + y_sub * dy
-                        line = bytearray()
-                        for x_sub in range(pw):
-                            x = x0 + x_sub * dx
-                            line += bytes(
-                                (
-                                    (3 * i + x + 11 * y) % 256,  # R
-                                    (2 * i + 5 * x + y) % 256,  # G
-                                    (i + 3 * x + 7 * y) % 256,  # B
-                                )
-                            )
-                        ft = (i + y_sub) % 5
-                        out = bytearray(stride)
-                        for k in range(stride):
-                            a = line[k - 3] if k >= 3 else 0
-                            b = prior[k]
-                            c = prior[k - 3] if k >= 3 else 0
-                            if ft == 0:
-                                pred = 0
-                            elif ft == 1:
-                                pred = a
-                            elif ft == 2:
-                                pred = b
-                            elif ft == 3:
-                                pred = (a + b) >> 1
-                            else:
-                                pred = PixelDecoder._paeth(a, b, c)
-                            out[k] = (line[k] - pred) & 0xFF
-                        raw.append(ft)
-                        raw += out
-                        prior = line
-                ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 1)
-                payloads.append(
-                    b"\x89PNG\r\n\x1a\n"
-                    + chunk(b"IHDR", ihdr)
-                    + chunk(b"IDAT", zlib.compress(bytes(raw)))
-                    + chunk(b"IEND", b"")
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
-    )
+    return _synthesize(df, id_col, encode)
 
 
 def adam7_pass_stats(
@@ -3082,30 +2698,14 @@ def decode_audio_metadata(
     libs). Non-WAV payloads yield nulls for the audio fields rather than
     failing the batch — filter on `format IS NOT NULL` downstream."""
     decoder = decoder or HeaderDecoder()
+    cols = _field_names(AUDIO_META_SCHEMA)[1:]  # after byte_len
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = [
-                decoder.sniff_audio(b"" if p is None else bytes(p))
-                for p in pdf[payload_col]
-            ]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].values,
-                    "byte_len": [
-                        0 if p is None else len(bytes(p))
-                        for p in pdf[payload_col]
-                    ],
-                    "format": [m["format"] if m else None for m in metas],
-                    "n_channels": [m["n_channels"] if m else None for m in metas],
-                    "sample_rate": [m["sample_rate"] if m else None for m in metas],
-                    "bits_per_sample": [m["bits_per_sample"] if m else None for m in metas],
-                }
-            )
+    def fn(p):
+        p = p or b""
+        meta = decoder.sniff_audio(p)
+        return (len(p), *(meta[c] if meta else None for c in cols))
 
-    return df.select(id_col, payload_col).mapInPandas(
-        op, _id_field(df, id_col) + ", " + AUDIO_META_SCHEMA
-    )
+    return _map_payloads(df, payload_col, id_col, fn, AUDIO_META_SCHEMA)
 
 
 def resize_images(
@@ -3117,29 +2717,15 @@ def resize_images(
     decoder=None,
 ) -> DataFrame:
     """Resize every image payload to (width, height); returns the new
-    binary payload plus dims. Narrow map — no shuffle; resized bytes are
-    written straight to the sink partition that holds the input row."""
+    binary payload plus dims. Resized bytes are written straight to the
+    sink partition that holds the input row."""
     decoder = decoder or FakeDecoder()
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = [
-                decoder.resize(b"" if p is None else bytes(p), width, height)
-                for p in pdf[payload_col]
-            ]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].values,
-                    "payload": out,
-                    "width": width,
-                    "height": height,
-                    "byte_len": [len(b) for b in out],
-                }
-            )
+    def fn(p):
+        out = decoder.resize(p or b"", width, height)
+        return out, width, height, len(out)
 
-    return df.select(id_col, payload_col).mapInPandas(
-        op, _id_field(df, id_col) + ", " + RESIZE_SCHEMA
-    )
+    return _map_payloads(df, payload_col, id_col, fn, RESIZE_SCHEMA)
 
 
 def extract_features(
@@ -3155,21 +2741,10 @@ def extract_features(
     accelerator batching maps 1:1 onto these pandas batches."""
     decoder = decoder or FakeDecoder()
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].values,
-                    "features": [
-                        decoder.features(b"" if p is None else bytes(p), dim)
-                        for p in pdf[payload_col]
-                    ],
-                }
-            )
+    def fn(p):
+        return (decoder.features(p or b"", dim),)
 
-    return df.select(id_col, payload_col).mapInPandas(
-        op, _id_field(df, id_col) + ", " + FEATURE_SCHEMA
-    )
+    return _map_payloads(df, payload_col, id_col, fn, FEATURE_SCHEMA)
 
 
 def sample_frames(
@@ -3529,28 +3104,8 @@ def synthesize_gif_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     through the real variable-width encoder, so every decode exercises the
     full dictionary-growth path."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 2 + i % 6, 1 + i % 5
-                rows = [
-                    [
-                        [
-                            (i + 3 * x + 7 * y) % 256,
-                            (2 * i + 5 * x + y) % 256,
-                            (3 * i + x + 11 * y) % 256,
-                        ]
-                        for x in range(w)
-                    ]
-                    for y in range(h)
-                ]
-                payloads.append(GifDecoder.encode_gif(rows))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
+    return _synthesize(
+        df, id_col, lambda i: GifDecoder.encode_gif(_closed_form_rows(i))
     )
 
 
@@ -3561,32 +3116,25 @@ def synthesize_animated_gif_payloads(df: DataFrame, id_col: str = "doc_id") -> D
     BMP/PNG closed-form family extended by a frame term, so per-frame
     checksums have pure-arithmetic oracles."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h, nf = 2 + i % 6, 1 + i % 5, 2 + i % 3
-                frames = [
+    def encode(i: int) -> bytes:
+        w, h, nf = 2 + i % 6, 1 + i % 5, 2 + i % 3
+        frames = [
+            [
+                [
                     [
-                        [
-                            [
-                                (i + 3 * x + 7 * y + 13 * f) % 256,
-                                (2 * i + 5 * x + y + 17 * f) % 256,
-                                (3 * i + x + 11 * y + 19 * f) % 256,
-                            ]
-                            for x in range(w)
-                        ]
-                        for y in range(h)
+                        (i + 3 * x + 7 * y + 13 * f) % 256,
+                        (2 * i + 5 * x + y + 17 * f) % 256,
+                        (3 * i + x + 11 * y + 19 * f) % 256,
                     ]
-                    for f in range(nf)
+                    for x in range(w)
                 ]
-                payloads.append(GifDecoder.encode_gif_animated(frames))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
+                for y in range(h)
+            ]
+            for f in range(nf)
+        ]
+        return GifDecoder.encode_gif_animated(frames)
 
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
-    )
+    return _synthesize(df, id_col, encode)
 
 
 def gif_frame_stats(
@@ -3737,6 +3285,57 @@ class _BitReader:
         if v is not None and size and v < (1 << (size - 1)):
             v -= (1 << size) - 1
         return v
+
+
+def _huffman_luts(body) -> dict:
+    """{(table class, table id): {(code length, code): value}} for every
+    table in one DHT segment body, codes assigned canonically (spec C.2).
+    A truncated body raises IndexError, as the decoders' corrupt-input
+    paths expect."""
+    luts = {}
+    j = 0
+    while j < len(body):
+        tc, th = body[j] >> 4, body[j] & 0x0F
+        bits = list(body[j + 1 : j + 17])
+        nv = sum(bits)
+        vals = list(body[j + 17 : j + 17 + nv])
+        lut = {}
+        code = 0
+        k = 0
+        for ln in range(1, 17):
+            for _ in range(bits[ln - 1]):
+                lut[(ln, code)] = vals[k]
+                code += 1
+                k += 1
+            code <<= 1
+        luts[(tc, th)] = lut
+        j += 17 + nv
+    return luts
+
+
+def _unstuff(scan) -> "tuple[bytearray, list[int], int]":
+    """(data, restart_marks, end) for the entropy-coded bytes at the start
+    of ``scan``: 0xFF00 unstuffed to 0xFF; each RSTn marker (FFD0-FFD7)
+    stripped, its segment boundary recorded as a bit position in data;
+    stopping at any other marker, whose offset in scan is ``end``."""
+    data = bytearray()
+    restart_marks: list[int] = []
+    j = 0
+    while j < len(scan):
+        b = scan[j]
+        if b == 0xFF:
+            if j + 1 < len(scan) and scan[j + 1] == 0x00:
+                data.append(0xFF)
+                j += 2
+                continue
+            if j + 1 < len(scan) and 0xD0 <= scan[j + 1] <= 0xD7:
+                restart_marks.append(len(data) * 8)
+                j += 2
+                continue
+            break
+        data.append(b)
+        j += 1
+    return data, restart_marks, j
 
 
 _IDCT_CACHE: dict[str, object] = {}
@@ -3924,23 +3523,7 @@ class JpegDecoder(GifDecoder):
                 elif marker == 0xC3:  # lossless (Annex H): dedicated path
                     return self._decode_lossless(payload)
                 elif marker == 0xC4:  # DHT
-                    j = 0
-                    while j < len(body):
-                        tc, th = body[j] >> 4, body[j] & 0x0F
-                        bits = list(body[j + 1 : j + 17])
-                        nv = sum(bits)
-                        vals = list(body[j + 17 : j + 17 + nv])
-                        lut = {}
-                        code = 0
-                        k = 0
-                        for ln in range(1, 17):
-                            for _ in range(bits[ln - 1]):
-                                lut[(ln, code)] = vals[k]
-                                code += 1
-                                k += 1
-                            code <<= 1
-                        luts[(tc, th)] = lut
-                        j += 17 + nv
+                    luts.update(_huffman_luts(body))
                 elif marker == 0xDD:  # DRI: restart interval
                     dri = int.from_bytes(body[0:2], "big")
                 elif marker == 0xDA:  # SOS: component->table map + data
@@ -3955,27 +3538,7 @@ class JpegDecoder(GifDecoder):
                 i += 2 + seg_len
             if scan is None or w is None or comps is None or scan_tables is None:
                 return None
-            # unstuff 0xFF00; RSTn markers (FFD0-FFD7) live INSIDE the
-            # entropy stream when DRI is set — record each segment
-            # boundary's bit position and strip the marker; stop at any
-            # other real marker
-            data = bytearray()
-            restart_marks: list[int] = []
-            j = 0
-            while j < len(scan):
-                b = scan[j]
-                if b == 0xFF:
-                    if j + 1 < len(scan) and scan[j + 1] == 0x00:
-                        data.append(0xFF)
-                        j += 2
-                        continue
-                    if j + 1 < len(scan) and 0xD0 <= scan[j + 1] <= 0xD7:
-                        restart_marks.append(len(data) * 8)
-                        j += 2
-                        continue
-                    break
-                data.append(b)
-                j += 1
+            data, restart_marks, _ = _unstuff(scan)
             rdr = _BitReader(data)
             read_huff = rdr.read_huff
             receive_extend = rdr.receive_extend
@@ -4103,23 +3666,7 @@ class JpegDecoder(GifDecoder):
                     if body[5] != 1 or not (2 <= precision <= 16):
                         return None  # single-component tier
                 elif marker == 0xC4:
-                    j = 0
-                    while j < len(body):
-                        tc, th = body[j] >> 4, body[j] & 0x0F
-                        bits = list(body[j + 1 : j + 17])
-                        nv = sum(bits)
-                        vals = list(body[j + 17 : j + 17 + nv])
-                        lut = {}
-                        code = 0
-                        k = 0
-                        for ln in range(1, 17):
-                            for _ in range(bits[ln - 1]):
-                                lut[(ln, code)] = vals[k]
-                                code += 1
-                                k += 1
-                            code <<= 1
-                        luts[(tc, th)] = lut
-                        j += 17 + nv
+                    luts.update(_huffman_luts(body))
                 elif marker == 0xDA:
                     dc_th = body[2] >> 4
                     predictor = body[1 + 2 * body[0]]  # Ss
@@ -4131,18 +3678,9 @@ class JpegDecoder(GifDecoder):
                 return None
             if not (1 <= predictor <= 7):
                 return None
-            data = bytearray()
-            j = 0
-            while j < len(scan):
-                b = scan[j]
-                if b == 0xFF:
-                    if j + 1 < len(scan) and scan[j + 1] == 0x00:
-                        data.append(0xFF)
-                        j += 2
-                        continue
-                    break
-                data.append(b)
-                j += 1
+            data, restart_marks, _ = _unstuff(scan)
+            if restart_marks:  # no restart intervals here: RSTn ends the scan
+                data = data[: restart_marks[0] // 8]
             rdr = _BitReader(data)
             lut = luts[(0, dc_th)]
             out = [[0] * w for _ in range(h)]
@@ -4349,23 +3887,7 @@ class JpegDecoder(GifDecoder):
                         coefs.append([[0] * 64 for _ in range(bx * by)])
                         geo.append((bx, by, hi, vi))
                 elif marker == 0xC4:
-                    j = 0
-                    while j < len(body):
-                        tc, th = body[j] >> 4, body[j] & 0x0F
-                        bits = list(body[j + 1 : j + 17])
-                        nv = sum(bits)
-                        vals = list(body[j + 17 : j + 17 + nv])
-                        lut = {}
-                        code = 0
-                        k = 0
-                        for ln in range(1, 17):
-                            for _ in range(bits[ln - 1]):
-                                lut[(ln, code)] = vals[k]
-                                code += 1
-                                k += 1
-                            code <<= 1
-                        luts[(tc, th)] = lut
-                        j += 17 + nv
+                    luts.update(_huffman_luts(body))
                 elif marker == 0xDD:  # DRI: restart interval
                     dri = int.from_bytes(body[0:2], "big")
                 elif marker == 0xDA:
@@ -4388,26 +3910,7 @@ class JpegDecoder(GifDecoder):
                     a = body[3 + 2 * ns]
                     ah, al = a >> 4, a & 0x0F
                     scan = payload[i + 2 + seg_len :]
-                    # unstuff 0xFF00; with DRI set, RSTn markers live
-                    # INSIDE this scan's entropy stream — record each
-                    # segment boundary's bit position and strip the marker
-                    data = bytearray()
-                    restart_marks: list[int] = []
-                    j = 0
-                    while j < len(scan):
-                        b = scan[j]
-                        if b == 0xFF:
-                            if j + 1 < len(scan) and scan[j + 1] == 0x00:
-                                data.append(0xFF)
-                                j += 2
-                                continue
-                            if j + 1 < len(scan) and 0xD0 <= scan[j + 1] <= 0xD7:
-                                restart_marks.append(len(data) * 8)
-                                j += 2
-                                continue
-                            break
-                        data.append(b)
-                        j += 1
+                    data, restart_marks, j = _unstuff(scan)
                     ok = self._progressive_scan(
                         data,
                         comps,
@@ -4891,19 +4394,12 @@ def synthesize_jpeg_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame
     decode(encode(img)) == img bit-for-bit — while the encoder/decoder
     still run the full FDCT/Huffman machinery."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 2 + i % 6, 1 + i % 5
-                val = (37 * i + 11) % 256
-                payloads.append(JpegDecoder.encode_jpeg_gray([[val] * w for _ in range(h)]))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
+    def encode(i: int) -> bytes:
+        w, h = 2 + i % 6, 1 + i % 5
+        val = (37 * i + 11) % 256
+        return JpegDecoder.encode_jpeg_gray([[val] * w for _ in range(h)])
 
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
-    )
+    return _synthesize(df, id_col, encode)
 
 
 def synthesize_jpeg12_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -4913,23 +4409,12 @@ def synthesize_jpeg12_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFra
     DC-only integer path and presents as the high 8 bits, so px_sum has
     a pure-arithmetic oracle: w·h·3·(v12 >> 4)."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 2 + i % 6, 1 + i % 5
-                v12 = (37 * i + 991) % 4096
-                payloads.append(
-                    JpegDecoder.encode_jpeg_gray(
-                        [[v12] * w for _ in range(h)], precision=12
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
+    def encode(i: int) -> bytes:
+        w, h = 2 + i % 6, 1 + i % 5
+        v12 = (37 * i + 991) % 4096
+        return JpegDecoder.encode_jpeg_gray([[v12] * w for _ in range(h)], precision=12)
 
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
-    )
+    return _synthesize(df, id_col, encode)
 
 
 def _jpeg_fdct_quant(block, quant):
@@ -5220,18 +4705,8 @@ def synthesize_jpeg_color_payloads(df: DataFrame, id_col: str = "doc_id") -> Dat
     YCbCr transform uses floor(x+0.5) rounding reproducible in SQL, and
     constant Y/Cb/Cr blocks hit the integral-DC / DC-only-IDCT path."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 2 + i % 6, 1 + i % 5
-                r, g, b = (37 * i + 11) % 256, (91 * i + 53) % 256, (13 * i + 199) % 256
-                payloads.append(encode_jpeg_color([[[b, g, r]] * w for _ in range(h)]))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
+    return _synthesize(
+        df, id_col, lambda i: encode_jpeg_color(_const_color_rows(i))
     )
 
 
@@ -5242,20 +4717,8 @@ def synthesize_jpeg_420_payloads(df: DataFrame, id_col: str = "doc_id") -> DataF
     survives the 2x2 mean exactly, so the SAME color oracle applies while
     the decode exercises the interleaved multi-block MCU path."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 2 + i % 6, 1 + i % 5
-                r, g, b = (37 * i + 11) % 256, (91 * i + 53) % 256, (13 * i + 199) % 256
-                payloads.append(
-                    encode_jpeg_color([[[b, g, r]] * w for _ in range(h)], subsample=True)
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
+    return _synthesize(
+        df, id_col, lambda i: encode_jpeg_color(_const_color_rows(i), subsample=True)
     )
 
 
@@ -5265,22 +4728,10 @@ def synthesize_jpeg_dri_payloads(df: DataFrame, id_col: str = "doc_id") -> DataF
     restart density): exercises byte realignment, marker stripping, and
     DC-predictor resets at every boundary, under the same color oracle."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 2 + i % 6, 1 + i % 5
-                r, g, b = (37 * i + 11) % 256, (91 * i + 53) % 256, (13 * i + 199) % 256
-                payloads.append(
-                    encode_jpeg_color(
-                        [[[b, g, r]] * w for _ in range(h)], restart_interval=1
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
+    return _synthesize(
+        df,
+        id_col,
+        lambda i: encode_jpeg_color(_const_color_rows(i), restart_interval=1),
     )
 
 
@@ -5291,22 +4742,8 @@ def synthesize_jpeg_422_payloads(df: DataFrame, id_col: str = "doc_id") -> DataF
     chroma survives the 2-pixel mean exactly, so the SAME color oracle
     applies while the decode exercises the (2,1) sampling-factor walk."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 2 + i % 6, 1 + i % 5
-                r, g, b = (37 * i + 11) % 256, (91 * i + 53) % 256, (13 * i + 199) % 256
-                payloads.append(
-                    encode_jpeg_color(
-                        [[[b, g, r]] * w for _ in range(h)], subsample="422"
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
+    return _synthesize(
+        df, id_col, lambda i: encode_jpeg_color(_const_color_rows(i), subsample="422")
     )
 
 
@@ -5317,22 +4754,8 @@ def synthesize_jpeg_411_payloads(df: DataFrame, id_col: str = "doc_id") -> DataF
     the 4-pixel mean exactly, so the SAME color oracle applies while the
     decode exercises the (4,1) sampling-factor walk."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 2 + i % 6, 1 + i % 5
-                r, g, b = (37 * i + 11) % 256, (91 * i + 53) % 256, (13 * i + 199) % 256
-                payloads.append(
-                    encode_jpeg_color(
-                        [[[b, g, r]] * w for _ in range(h)], subsample="411"
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
+    return _synthesize(
+        df, id_col, lambda i: encode_jpeg_color(_const_color_rows(i), subsample="411")
     )
 
 
@@ -5605,22 +5028,10 @@ def encode_jpeg_progressive(
     return bytes(out)
 
 
-def _jpeg_refined_synth_op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Batch-level refined-progressive-JPEG synth seam: (doc_id) batches →
-    (doc_id, payload) batches. Module-level so the fused synth+decode
-    stage composes the SAME encode function the standalone stage runs."""
-    for pdf in batches:
-        payloads = []
-        for i in pdf["doc_id"]:
-            i = int(i)
-            w, h = 2 + i % 6, 1 + i % 5
-            r, g, b = (37 * i + 11) % 256, (91 * i + 53) % 256, (13 * i + 199) % 256
-            payloads.append(
-                encode_jpeg_progressive(
-                    [[[b, g, r]] * w for _ in range(h)], successive=True
-                )
-            )
-        yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
+def _encode_jpeg_refined(i: int) -> bytes:
+    """Refined-progressive JPEG for doc i. Module-level so the fused
+    synth+decode stage composes the SAME encoder the standalone stage runs."""
+    return encode_jpeg_progressive(_const_color_rows(i), successive=True)
 
 
 def synthesize_jpeg_refined_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -5629,10 +5040,7 @@ def synthesize_jpeg_refined_payloads(df: DataFrame, id_col: str = "doc_id") -> D
     passes: Al=1 first scans, then Ah=1 DC/AC refinement scans) — the
     same closed-form color oracle applies while the decode exercises the
     full G.1.2.2/G.1.2.3 refinement machinery."""
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        _jpeg_refined_synth_op, "doc_id bigint, payload binary"
-    )
+    return _synthesize(df, id_col, _encode_jpeg_refined)
 
 
 def synthesize_jpeg_refined_pixel_stats(
@@ -5642,18 +5050,19 @@ def synthesize_jpeg_refined_pixel_stats(
     JVM↔Python boundary is the cost — the two-stage form shipped every
     payload's bytes across Arrow TWICE, synth-out then decode-in, plus a
     second Python-worker round trip). This runs the SAME two batch seams
-    (_jpeg_refined_synth_op |> _pixel_stats_op) composed inside ONE
-    mapInPandas stage, so payload bytes never leave the Python worker at
-    all; results are identical by construction (generator composition is
-    exactly the two-stage dataflow minus the serialization)."""
-    decoder = decoder or JpegDecoder()
-    decode = _pixel_stats_op(decoder, "payload", "doc_id")
+    (_synth_op(_encode_jpeg_refined) |> _map_op(_pixel_stats_fn)) composed
+    inside ONE mapInPandas stage, so payload bytes never leave the Python worker
+    at all; results are identical by construction (generator composition
+    is exactly the two-stage dataflow minus the serialization)."""
+    synth = _synth_op(_encode_jpeg_refined)
+    fn = _pixel_stats_fn(decoder or JpegDecoder())
+    decode = _map_op(fn, _PIXEL_STATS_DDL, "payload", "doc_id")
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        return decode(_jpeg_refined_synth_op(batches))
+        return decode(synth(batches))
 
     return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, width int, height int, px_sum bigint"
+        op, "doc_id bigint, " + _PIXEL_STATS_DDL
     )
 
 
@@ -5664,20 +5073,8 @@ def synthesize_jpeg_progressive_payloads(df: DataFrame, id_col: str = "doc_id") 
     applies while the decode exercises multi-scan coefficient
     accumulation and EOB-run handling."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 2 + i % 6, 1 + i % 5
-                r, g, b = (37 * i + 11) % 256, (91 * i + 53) % 256, (13 * i + 199) % 256
-                payloads.append(
-                    encode_jpeg_progressive([[[b, g, r]] * w for _ in range(h)])
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
+    return _synthesize(
+        df, id_col, lambda i: encode_jpeg_progressive(_const_color_rows(i))
     )
 
 
@@ -5687,23 +5084,14 @@ def synthesize_jpeg_exif_payloads(df: DataFrame, id_col: str = "doc_id") -> Data
     orientation 1 + id % 8 with the TIFF byte order alternating II/MM by
     id parity — both endiannesses exercised through real bytes."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                payloads.append(
-                    JpegDecoder.encode_jpeg_gray(
-                        [[(37 * i + 11) % 256] * 8] * 8,
-                        exif_orientation=None if i % 4 == 0 else 1 + i % 8,
-                        exif_byte_order="II" if i % 2 == 0 else "MM",
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
+    def encode(i: int) -> bytes:
+        return JpegDecoder.encode_jpeg_gray(
+            [[(37 * i + 11) % 256] * 8] * 8,
+            exif_orientation=None if i % 4 == 0 else 1 + i % 8,
+            exif_byte_order="II" if i % 2 == 0 else "MM",
+        )
 
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
-    )
+    return _synthesize(df, id_col, encode)
 
 
 def decode_exif_orientation(
@@ -5711,22 +5099,10 @@ def decode_exif_orientation(
 ) -> DataFrame:
     """(id, orientation, byte_order) via the REAL APP1/Exif TIFF walk —
     the rotate-before-hash prerequisite: pHash/resize over un-rotated
-    rasters splits one photo into up to 8 'distinct' images. Narrow
-    Arrow map; payloads never shuffle."""
-    decoder = decoder or HeaderDecoder()
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {id_col: pdf[id_col].values, "orientation": [], "byte_order": []}
-            for p in pdf[payload_col]:
-                meta = None if p is None else decoder.sniff_exif_orientation(bytes(p))
-                out["orientation"].append(None if meta is None else meta["orientation"])
-                out["byte_order"].append(None if meta is None else meta["byte_order"])
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, payload_col).mapInPandas(
-        op, _id_field(df, id_col) + ", orientation int, byte_order string"
-    )
+    rasters splits one photo into up to 8 'distinct' images."""
+    fields = "orientation int, byte_order string"
+    fn = _sniffed_fields((decoder or HeaderDecoder()).sniff_exif_orientation, fields)
+    return _map_payloads(df, payload_col, id_col, fn, fields)
 
 
 def audio_resample_stats(
@@ -5736,45 +5112,27 @@ def audio_resample_stats(
     out[k] = floor((s[2k] + s[2k+1]) / 2) — the box-filter half-rate
     downsample a speech pipeline applies before feature extraction.
     Multi-channel payloads yield NULLs (interleaved decimation would mix
-    channels; channel-aware resampling is a different op). Arrow-batched
-    narrow map; payload bytes never shuffle."""
+    channels; channel-aware resampling is a different op)."""
     decoder = decoder or PixelDecoder()
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                id_col: pdf[id_col].values,
-                "n_out": [],
-                "out_sum": [],
-                "out_min": [],
-                "out_max": [],
-            }
-            for p in pdf[payload_col]:
-                payload = None if p is None else bytes(p)
-                meta = None if payload is None else decoder.sniff_audio(payload)
-                vals = (
-                    decoder.decode_audio_samples(payload)
-                    if meta is not None and meta["n_channels"] == 1
-                    else None
-                )
-                if not vals or len(vals) < 2:
-                    for k in ("n_out", "out_sum", "out_min", "out_max"):
-                        out[k].append(None)
-                    continue
-                # >> 1 is floor division toward -inf, matching the
-                # oracle's FLOOR((s0 + s1) / 2.0) for negative sums too
-                res = [
-                    (vals[2 * k] + vals[2 * k + 1]) >> 1
-                    for k in range(len(vals) // 2)
-                ]
-                out["n_out"].append(len(res))
-                out["out_sum"].append(sum(res))
-                out["out_min"].append(min(res))
-                out["out_max"].append(max(res))
-            yield pd.DataFrame(out)
+    def fn(p):
+        meta = None if p is None else decoder.sniff_audio(p)
+        vals = (
+            decoder.decode_audio_samples(p)
+            if meta is not None and meta["n_channels"] == 1
+            else None
+        )
+        if not vals or len(vals) < 2:
+            return None
+        # >> 1 is floor division toward -inf, matching the
+        # oracle's FLOOR((s0 + s1) / 2.0) for negative sums too
+        res = [(vals[2 * k] + vals[2 * k + 1]) >> 1 for k in range(len(vals) // 2)]
+        return len(res), sum(res), min(res), max(res)
 
-    return df.select(id_col, payload_col).mapInPandas(
-        op,
-        _id_field(df, id_col)
-        + ", n_out bigint, out_sum bigint, out_min bigint, out_max bigint",
+    return _map_payloads(
+        df,
+        payload_col,
+        id_col,
+        fn,
+        "n_out bigint, out_sum bigint, out_min bigint, out_max bigint",
     )

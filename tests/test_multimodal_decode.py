@@ -1968,3 +1968,212 @@ def test_qoi_giant_header_rejected_fast():
         + bytes([3, 0]) + b"\x00" * 16 + b"\x00" * 7 + b"\x01"
     )
     assert PixelDecoder().decode_pixels_arr(payload) is None
+
+
+# --- byte/output pins for the Arrow-batch seams ----------------------------
+#
+# Every synthesize_*_payloads and every one-to-one decoder runs through one
+# of two shared batch helpers. These digests were recorded before the
+# operators moved onto those helpers, so a change in how a pandas batch maps
+# to output rows (dtype inference, null rows, id order) shows up as a
+# digest mismatch rather than as a silent value change.
+
+import hashlib as _hashlib
+
+import gearpump_spark.operators.multimodal as _mm
+
+_SYNTH_NAMES = sorted(
+    n for n in dir(_mm) if n.startswith("synthesize_") and n.endswith("_payloads")
+)
+
+# md5 over (doc_id, payload) rows sorted by doc_id, for the 500 documents
+# of the sf0.001 fixture.
+SYNTH_PINS = {
+    "synthesize_animated_gif_payloads": "2e1d11c686cb660f8c3c54e2b9509723",
+    "synthesize_bmp_payloads": "9a221046809f1ca3f1158cf5438e65ee",
+    "synthesize_bmp_rle8_payloads": "71d00d3876b3e8112a393127e6ee5c1c",
+    "synthesize_gif_payloads": "743ab009dac9cfd050bd09a4ea58320c",
+    "synthesize_jpeg12_payloads": "4bec7781c114e47c4de3b4956da66ff7",
+    "synthesize_jpeg_411_payloads": "db82da6c3f028c8d2d6c005fed3f742f",
+    "synthesize_jpeg_420_payloads": "46ad6174cfdf9cfc32a8281cc135c812",
+    "synthesize_jpeg_422_payloads": "dba2eab1d3b27e59880da830aa85767d",
+    "synthesize_jpeg_color_payloads": "493d2d7b4cfce1f621d411dd93f03b76",
+    "synthesize_jpeg_dri_payloads": "bff784e99d93ca0b42df9674a92fc667",
+    "synthesize_jpeg_exif_payloads": "7617279f6fe75222704900a7968f1efd",
+    "synthesize_jpeg_jfif_payloads": "3867ccb7a9693eceb74666ae0505e680",
+    "synthesize_jpeg_lossless_payloads": "3cdf8ec56c5b9f340f000f04b778d86f",
+    "synthesize_jpeg_payloads": "79d0582d3024c804d70bc2dd6ab0eafa",
+    "synthesize_jpeg_progressive_payloads": "57cb73b9df358585225a81723cbe5dbf",
+    "synthesize_jpeg_refined_payloads": "cca652784145dcf936bd3865983cdd12",
+    "synthesize_mp4_fps_payloads": "248eab76139292f952dc31abdc818cc1",
+    "synthesize_mp4_payloads": "bd039d2fc7672115894b01d8b62712dd",
+    "synthesize_mp4_stsd_payloads": "89d1d489140bb3bb4264fac325d41c2f",
+    "synthesize_multidepth_wav_payloads": "4aaab39847d5d66433279a93bfe50672",
+    "synthesize_multiformat_payloads": "393395c002e4ed66c4caf8382efe0ef8",
+    "synthesize_noise_pair_payloads": "2d757140232add4e8b9996c3fa8cfc0b",
+    "synthesize_png_adam7_payloads": "d368052aac330b7cf93f71ee9936b11a",
+    "synthesize_png_payloads": "2bb7da9de620afe219e204e77b89859c",
+    "synthesize_png_raster_payloads": "2fa2b3f881f8f607b5e4ef2eb130ac33",
+    "synthesize_qoi_payloads": "076d56954af471f69a9efa7f9add8bca",
+    "synthesize_tiff_packbits_payloads": "a54eae2a6559a426b040f32cdf9f6fca",
+    "synthesize_tiff_payloads": "a7479621cdaad5032e2ce25935d19f1e",
+    "synthesize_wav_alaw_payloads": "a85f036ef2b194f2b60491f8cc2c91a8",
+    "synthesize_wav_mulaw_payloads": "d972af07d0da59619b779c2a5b83acef",
+    "synthesize_wav_payloads": "164790d7353498a9bc1f2ea7eec68d89",
+}
+
+# Truncated inputs: the first half of every payload of each JPEG variant.
+_JPEG_VARIANTS = (
+    "synthesize_jpeg_payloads",
+    "synthesize_jpeg_dri_payloads",
+    "synthesize_jpeg_420_payloads",
+    "synthesize_jpeg_lossless_payloads",
+    "synthesize_jpeg_progressive_payloads",
+    "synthesize_jpeg_refined_payloads",
+)
+
+
+def _decoder_cases():
+    d = _mm
+    return {
+        "decode_image_metadata": lambda df: d.decode_image_metadata(df),
+        "pixel_stats": lambda df: d.pixel_stats(df),
+        "pixel_stats_jpeg": lambda df: d.pixel_stats(df, decoder=d.JpegDecoder()),
+        "pixel_fingerprints": lambda df: d.pixel_fingerprints(df),
+        "phash_fingerprints": lambda df: d.phash_fingerprints(df),
+        "ahash_fingerprints": lambda df: d.ahash_fingerprints(df),
+        "phash_int_fingerprints": lambda df: d.phash_int_fingerprints(df),
+        "decode_video_sample_tables": lambda df: d.decode_video_sample_tables(df),
+        "decode_video_sample_tables_timing": lambda df: d.decode_video_sample_tables(
+            df, include_timing=True
+        ),
+        "decode_jfif_metadata": lambda df: d.decode_jfif_metadata(df),
+        "decode_video_metadata": lambda df: d.decode_video_metadata(df),
+        "audio_fingerprints": lambda df: d.audio_fingerprints(df),
+        "audio_sample_stats": lambda df: d.audio_sample_stats(df),
+        "decode_audio_metadata": lambda df: d.decode_audio_metadata(df),
+        "audio_resample_stats": lambda df: d.audio_resample_stats(df),
+        "resize_images": lambda df: d.resize_images(df, 4, 3),
+        "extract_features": lambda df: d.extract_features(df, dim=4),
+        "decode_exif_orientation": lambda df: d.decode_exif_orientation(df),
+    }
+
+
+# md5 over each decoder's output rows sorted by id, on the mixed corpus
+# built by _decoder_corpus.
+DECODER_PINS = {
+    "ahash_fingerprints": "ae3ad6d00425c5b6a2981f534f4108e8",
+    "audio_fingerprints": "93471bc1073f763a77e6de27af952a66",
+    "audio_resample_stats": "d4a2392a99ad10e66cb8d761804476f1",
+    "audio_sample_stats": "13153b5adaabc4557589705fdab9ba89",
+    "decode_audio_metadata": "029e52ad8f04e2247b31366e1958a3df",
+    "decode_exif_orientation": "0c6be14311c443a9e160c18117b8b5be",
+    "decode_image_metadata": "e03b7adea649d90411bbb24f0dc9a917",
+    "decode_jfif_metadata": "6131894cb5977e61d13d030e1ee54ac8",
+    "decode_video_metadata": "86601cf2feb9afb1ddc773f5fb80f434",
+    "decode_video_sample_tables": "9a1f8b6e2795192ff93a0a6345db7f85",
+    "decode_video_sample_tables_timing": "f94069aa60be8bebc60774812c03dcca",
+    "extract_features": "cac85b8edf6709895305befb0c05052f",
+    "phash_fingerprints": "12c41cb4f3d65920ca76c275ff394615",
+    "phash_int_fingerprints": "72d12075c7fed9cca9eae733fde01c4e",
+    "pixel_fingerprints": "dd15b48fe44760e0a831d3a7a6a93fd6",
+    "pixel_stats": "c9901655b46ae616a2b60f3dae5c9c94",
+    "pixel_stats_jpeg": "526b1931501f923a8bb370532cda7a2b",
+    "resize_images": "85e388c65cf97ef30f36f62870b4c6de",
+}
+
+
+def _synthesize_all(spark, sf_dir):
+    """name -> [(doc_id, payload bytes)] sorted by doc_id, per synthesizer."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    out = {}
+    for name in _SYNTH_NAMES:
+        rows = getattr(_mm, name)(docs).collect()
+        out[name] = sorted((r.doc_id, bytes(r.payload)) for r in rows)
+    return out
+
+
+@pytest.fixture(scope="module")
+def synthesized(spark, sf_dir):
+    return _synthesize_all(spark, sf_dir)
+
+
+def _synth_digest(rows) -> str:
+    h = _hashlib.md5()
+    for doc_id, payload in rows:
+        h.update(f"{doc_id}:{len(payload)}:".encode())
+        h.update(payload)
+    return h.hexdigest()
+
+
+def _decoder_corpus(synthesized):
+    """(id, payload) rows: every synthesizer's payloads, a null and an
+    empty payload, and the first half of each JPEG variant's bytes."""
+    rows = []
+    for k, name in enumerate(_SYNTH_NAMES):
+        rows += [(k * 1000 + i, p) for i, p in synthesized[name]]
+    for v, name in enumerate(_JPEG_VARIANTS):
+        rows += [(800_000 + v * 1000 + i, p[: len(p) // 2]) for i, p in synthesized[name]]
+    for n, p in enumerate(_restart_jpegs()):
+        rows += [(700_000 + 2 * n, p), (700_001 + 2 * n, p[: len(p) // 2])]
+    rows += [(900_000, None), (900_001, b"")]
+    return rows
+
+
+def _restart_jpegs() -> list:
+    """Multi-MCU JPEGs with RSTn markers inside the entropy stream (the
+    synthesizers' rasters fit one MCU, so their DRI streams carry none):
+    baseline and progressive restart intervals, and lossless scans with
+    an RST0 planted mid-scan, where that decoder stops."""
+    rows = [
+        [[(3 * x + 7 * y) % 256, (5 * x + y) % 256, (x + 11 * y) % 256] for x in range(24)]
+        for y in range(16)
+    ]
+    out = []
+    for ri in (1, 2):
+        out.append(_mm.encode_jpeg_color(rows, restart_interval=ri))
+        out.append(_mm.encode_jpeg_color(rows, subsample=True, restart_interval=ri))
+        for successive in (False, True):
+            out.append(
+                _mm.encode_jpeg_progressive(rows, successive=successive, restart_interval=ri)
+            )
+    for pred in range(1, 8):
+        gray = [[(pred + 5 * x + 3 * y) % 256 for x in range(12)] for y in range(9)]
+        p = _mm.JpegDecoder.encode_jpeg_lossless_gray(gray, predictor=pred)
+        sos = p.index(b"\xff\xda")
+        start = sos + 2 + int.from_bytes(p[sos + 2 : sos + 4], "big")
+        mid = (start + len(p) - 2) // 2
+        if p[mid - 1] == 0xFF:  # keep stuffed FF00 pairs whole
+            mid += 1
+        out.append(p[:mid] + b"\xff\xd0" + p[mid:])
+    return out
+
+
+def _ahash_safe(payload) -> bool:
+    """ahash63 rejects rasters whose sides are not multiples of 8."""
+    img = None if payload is None else _mm.PixelDecoder().decode_pixels_arr(payload)
+    return img is None or (img["width"] % 8 == 0 and img["height"] % 8 == 0)
+
+
+def _rows_digest(rows) -> str:
+    text = "\n".join(repr(tuple(r)) for r in sorted(rows, key=lambda r: r[0]))
+    return _hashlib.md5(text.encode()).hexdigest()
+
+
+@pytest.mark.parametrize("name", _SYNTH_NAMES)
+def test_synthesizer_payload_bytes_pinned(synthesized, name):
+    assert _synth_digest(synthesized[name]) == SYNTH_PINS[name]
+
+
+@pytest.mark.parametrize("case", sorted(_decoder_cases()))
+def test_one_to_one_decoder_output_pinned(spark, synthesized, case):
+    corpus = _decoder_corpus(synthesized)
+    if case == "ahash_fingerprints":
+        corpus = [r for r in corpus if _ahash_safe(r[1])]
+    df = spark.createDataFrame(
+        [(i, None if p is None else bytearray(p)) for i, p in corpus],
+        "doc_id bigint, payload binary",
+    )
+    rows = _decoder_cases()[case](df).collect()
+    assert len(rows) == len(corpus)
+    assert _rows_digest(rows) == DECODER_PINS[case]

@@ -2193,6 +2193,27 @@ class TestLinkPrediction:
         capped = self._predict(spark, edges, max_degree=3)
         assert capped == []  # hub excluded as wedge center -> no wedges
 
+    def test_exact_mode_hub_branch_matches_brute_force(self, spark):
+        """Uncapped mode salts centers of degree >= 1024 sixteen ways; the
+        salted wedge join must count every common neighbor exactly once.
+        Hub 0 links leaves 1..1100; tier node 2000+j links the leaves
+        divisible by j+2, so leaf pairs share the hub plus 0..n tiers and
+        the (hub, tier) and tier-tier pairs share many leaves."""
+        leaves = range(1, 1101)
+        edges = [(0, x) for x in leaves]
+        edges += [(2000 + j, x) for j in range(8) for x in leaves if x % (j + 2) == 0]
+        k = 3000
+        got = self._predict(spark, edges, k=k)
+        truth = self._python_truth(edges)
+        ranked = sorted(truth, key=lambda p: (-truth[p][0], -truth[p][1], p))
+        assert [(r.u, r.v) for r in got] == ranked[:k]
+        assert {(r.u, r.v): (r.common, r.jaccard) for r in got} == {
+            p: truth[p] for p in ranked[:k]
+        }
+        # the top-k reaches past the (hub, tier) and tier pairs into leaf
+        # pairs, whose counts all include a wedge through the salted hub
+        assert sum(r.u > 0 and r.v < 2000 for r in got) > 2000
+
 
 def test_cluster_safe_split_no_leakage(spark, sf_dir):
     """Every LSH candidate pair must land on ONE side of the split —

@@ -1609,8 +1609,8 @@ def test_jpeg_refined_fused_single_arrow_stage(spark, sf_dir):
 
 def test_jpeg_refined_fused_matches_two_stage(spark):
     """The fused stage composes the SAME batch seams the two-stage form
-    runs (_jpeg_refined_synth_op |> _pixel_stats_op); results must be
-    identical row for row."""
+    runs (_synth_op(_encode_jpeg_refined) |> _map_op(_pixel_stats_fn));
+    results must be identical row for row."""
     from gearpump_spark.operators.multimodal import (
         JpegDecoder,
         pixel_stats,

@@ -192,10 +192,10 @@ def _last_verified_round(before_round: int | None = None) -> dict[str, int]:
 
 
 def test_window_authored_after_latest_artifact():
-    """The window must be (re-)authored every round: its ROUND stamp may
-    trail the newest CORRECTNESS artifact by at most one round (the
-    inter-round gap where the window's own results have just landed).
-    Two or more rounds behind = the rotation was skipped."""
+    """The window must be (re-)authored every round: its ROUND stamp must
+    be at least the newest CORRECTNESS artifact's round. The window's own
+    results landing (CORRECTNESS_r{ROUND}) leave the stamp equal, never
+    behind; any newer artifact means the rotation was skipped."""
     import glob
     import pathlib
 
