@@ -1,8 +1,10 @@
 """Dataflow parity queries — the reference's own operator surface
-(SURVEY.md §2.A/B/D/E) re-expressed Spark-first, in batch form so the
-driver can oracle-check them. The streaming forms of the same operators
-live in gearpump_spark.streaming and are pytest-verified (watermarks and
-stateful output are not SQL-expressible).
+(SURVEY.md §2.A/B/D/E) re-expressed Spark-first. The batch forms read
+datasets.table(). The streaming forms read the same fixtures through
+datasets.stream_table(), build their windowed and running aggregates
+through the Stream/KeyedStream API (the path the stream benchmark runs),
+and drain to a memory sink with streaming.run_to_completion, so the
+driver oracle checks what actually flowed through the streaming engine.
 """
 
 from __future__ import annotations
@@ -10,10 +12,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gearpump_spark.datasets import table
+from gearpump_spark.datasets import stream_table, table
 from gearpump_spark.functions import text as TX
 from gearpump_spark.queries import register
 from gearpump_spark.queries._util import dec, dsum, sql_dsum
+from gearpump_spark.stream import Stream
+from gearpump_spark.streaming import core as SC
 
 # ---------------------------------------------------------------------------
 # Wordcount — the reference's canonical example
@@ -141,48 +145,26 @@ def q_window_tumbling_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     events. Append mode means each pane is emitted exactly once, when
     the watermark passes its end — the reference's final-pane-only
     GroupByKey contract (GroupByKeyTranslator.java:67-79)."""
-    import uuid
-
-    from gearpump_spark.streaming.core import (
-        flush_sentinel_source,
-        run_to_completion,
-        stream_source_path,
-        windowed_aggregate,
-    )
-
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    ts_is_long = raw_schema["ts"].dataType.simpleString() == "bigint"
-    data = spark.readStream.schema(raw_schema).parquet(
-        stream_source_path(f"{sf_dir}/events.parquet")
-    )
+    ev = stream_table(spark, sf_dir, "events")
     # Sentinel source: the fixture dir is read-only, so Watermark.MAX
     # arrives via a second file source unioned in (session-scoped temp,
-    # cleaned at exit). Built schema-generically (ts may surface as raw
-    # epoch nanos under nanosAsLong or as a native timestamp); non-ts
-    # fields ride NULL — the sentinel advances the clock and is dropped
-    # before aggregation.
-    sentinel = flush_sentinel_source(spark, raw_schema, "ts", ts_is_long)
-    ev = data.union(sentinel)
-    if ts_is_long:
-        ev = ev.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    agg = windowed_aggregate(
-        ev,
-        "ts",
-        "5 minutes",
-        None,
-        ["event_type"],
-        [F.count("*").alias("n"), dsum("value").alias("total_value")],
-        drop_flush_sentinel=True,
-    )
-    out = run_to_completion(
-        agg.select(
+    # cleaned at exit); non-ts fields ride NULL — the sentinel advances
+    # the clock and is dropped after the watermark, before aggregation.
+    panes = (
+        Stream(ev.union(SC.flush_sentinel_source(spark, ev.schema)), "ts")
+        .with_watermark("0 seconds")
+        .filter(SC.before_flush("ts"))
+        .key_by("event_type")
+        .windowed("5 minutes")
+        .agg(F.count("*").alias("n"), dsum("value").alias("total_value"))
+        .select(
             F.col("window.start").alias("window_start"),
             "event_type",
             "n",
             "total_value",
-        ),
-        f"window_tumbling_stream_{uuid.uuid4().hex[:8]}",
+        )
     )
+    out = SC.run_to_completion(panes.to_df(), "window_tumbling_stream")
     return out.orderBy("window_start", "event_type")
 
 
@@ -241,39 +223,17 @@ def q_window_sliding_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     store holds size/step=2 open panes per key instead of 1 — same
     map-side partial-agg shuffle as the batch twin, state bounded by
     the watermark; the memory sink holds |panes| rows, never events."""
-    import uuid
-
-    from gearpump_spark.streaming.core import (
-        flush_sentinel_source,
-        run_to_completion,
-        stream_source_path,
-        windowed_aggregate,
+    ev = stream_table(spark, sf_dir, "events")
+    panes = (
+        Stream(ev.union(SC.flush_sentinel_source(spark, ev.schema)), "ts")
+        .with_watermark("0 seconds")
+        .filter(SC.before_flush("ts"))
+        .key_by()
+        .windowed("10 minutes", "5 minutes")
+        .agg(F.count("*").alias("n"), dsum("value").alias("total_value"))
+        .select(F.col("window.start").alias("window_start"), "n", "total_value")
     )
-
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    ts_is_long = raw_schema["ts"].dataType.simpleString() == "bigint"
-    data = spark.readStream.schema(raw_schema).parquet(
-        stream_source_path(f"{sf_dir}/events.parquet")
-    )
-    sentinel = flush_sentinel_source(spark, raw_schema, "ts", ts_is_long)
-    ev = data.union(sentinel)
-    if ts_is_long:
-        ev = ev.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    agg = windowed_aggregate(
-        ev,
-        "ts",
-        "10 minutes",
-        "5 minutes",
-        [],
-        [F.count("*").alias("n"), dsum("value").alias("total_value")],
-        drop_flush_sentinel=True,
-    )
-    out = run_to_completion(
-        agg.select(
-            F.col("window.start").alias("window_start"), "n", "total_value"
-        ),
-        f"window_sliding_stream_{uuid.uuid4().hex[:8]}",
-    )
+    out = SC.run_to_completion(panes.to_df(), "window_sliding_stream")
     return out.orderBy("window_start")
 
 
@@ -304,46 +264,26 @@ def q_stream_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream_dedup); the aggregation reuses the tumbling query's shuffle
     shape. The doubled source is the test harness for redelivery —
     production replay arrives from the checkpointed source for free."""
-    import uuid
-
-    from gearpump_spark.streaming.core import (
-        flush_sentinel_source,
-        run_to_completion,
-        stream_dedup,
-        stream_source_path,
-        windowed_aggregate,
-    )
-
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    ts_is_long = raw_schema["ts"].dataType.simpleString() == "bigint"
-    path = stream_source_path(f"{sf_dir}/events.parquet")
-    once = spark.readStream.schema(raw_schema).parquet(path)
-    twice = spark.readStream.schema(raw_schema).parquet(path)
-    sentinel = flush_sentinel_source(spark, raw_schema, "ts", ts_is_long)
-    ev = once.union(twice).union(sentinel)
-    if ts_is_long:
-        ev = ev.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    keys = [f.name for f in ev.schema.fields if f.name != "ts"]
-    deduped = stream_dedup(ev, keys, ts_col="ts")
-    agg = windowed_aggregate(
-        deduped,
-        "ts",
-        "5 minutes",
-        None,
-        ["event_type"],
-        [F.count("*").alias("n"), dsum("value").alias("total_value")],
-        drop_flush_sentinel=True,
-        set_watermark=False,  # stream_dedup already set it
-    )
-    out = run_to_completion(
-        agg.select(
+    once = stream_table(spark, sf_dir, "events")
+    twice = stream_table(spark, sf_dir, "events")
+    ev = once.union(twice).union(SC.flush_sentinel_source(spark, once.schema))
+    keys = [c for c in ev.columns if c != "ts"]
+    # stream_dedup sets the watermark the windowed aggregate runs under
+    deduped = SC.stream_dedup(ev, keys, ts_col="ts")
+    panes = (
+        Stream(deduped, "ts")
+        .filter(SC.before_flush("ts"))
+        .key_by("event_type")
+        .windowed("5 minutes")
+        .agg(F.count("*").alias("n"), dsum("value").alias("total_value"))
+        .select(
             F.col("window.start").alias("window_start"),
             "event_type",
             "n",
             "total_value",
-        ),
-        f"stream_dedup_replay_{uuid.uuid4().hex[:8]}",
+        )
     )
+    out = SC.run_to_completion(panes.to_df(), "stream_dedup_replay")
     return out.orderBy("window_start", "event_type")
 
 
@@ -384,40 +324,23 @@ def q_session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming evidence family: stateless map, tumbling, sliding,
     dedup, and MERGING window state all oracle-gated in their real
     execution mode."""
-    import uuid
-
-    from gearpump_spark.streaming.core import (
-        flush_sentinel_source,
-        run_to_completion,
-        session_window_aggregate,
-        stream_source_path,
-    )
-
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    ts_is_long = raw_schema["ts"].dataType.simpleString() == "bigint"
-    data = spark.readStream.schema(raw_schema).parquet(
-        stream_source_path(f"{sf_dir}/events.parquet")
-    )
-    sentinel = flush_sentinel_source(spark, raw_schema, "ts", ts_is_long)
-    ev = data.union(sentinel)
-    if ts_is_long:
-        ev = ev.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    agg = session_window_aggregate(
-        ev,
+    ev = stream_table(spark, sf_dir, "events")
+    sessions = SC.session_window_aggregate(
+        ev.union(SC.flush_sentinel_source(spark, ev.schema)),
         "ts",
         "30 minutes",
         ["user_id"],
         [F.count("*").alias("n_events")],
         drop_flush_sentinel=True,
     )
-    out = run_to_completion(
-        agg.select(
+    out = SC.run_to_completion(
+        sessions.select(
             "user_id",
             F.col("session.start").alias("session_start"),
             F.col("session.end").alias("session_end"),
             "n_events",
         ),
-        f"session_window_stream_{uuid.uuid4().hex[:8]}",
+        "session_window_stream",
     )
     return out.orderBy("user_id", "session_start")
 
@@ -446,34 +369,17 @@ def q_running_aggregate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     emission log the sink folds is |event_type| x n_batches rows — both
     independent of corpus size. No sentinel needed: update mode emits
     on every batch regardless of watermark progress."""
-    import uuid
-
-    from gearpump_spark.streaming.core import (
-        run_to_completion,
-        running_aggregate,
-        stream_source_path,
-    )
-
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    ts_is_long = raw_schema["ts"].dataType.simpleString() == "bigint"
-    ev = spark.readStream.schema(raw_schema).parquet(
-        stream_source_path(f"{sf_dir}/events.parquet")
-    )
-    if ts_is_long:
-        ev = ev.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    agg = running_aggregate(
-        ev,
-        ["event_type"],
-        [
+    running = (
+        Stream(stream_table(spark, sf_dir, "events"))
+        .key_by("event_type")
+        .agg(
             F.count("*").alias("n"),
             F.min("ts").alias("first_ts"),
             F.max("ts").alias("last_ts"),
-        ],
+        )
     )
-    out = run_to_completion(
-        agg,
-        f"running_aggregate_stream_{uuid.uuid4().hex[:8]}",
-        output_mode="update",
+    out = SC.run_to_completion(
+        running.to_df(), "running_aggregate_stream", output_mode="update"
     )
     # Fold the per-batch emission log back to the final state with the
     # same monoid — running count/min/max are monotone, so the last
@@ -519,49 +425,31 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     streams once on the equi-key. Inner-join matches emit as they pair
     (no watermark wait), so a single availableNow batch yields exactly
     the batch join."""
-    import uuid
 
-    from gearpump_spark.streaming.core import (
-        run_to_completion,
-        stream_source_path,
-    )
-
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    ts_is_long = raw_schema["ts"].dataType.simpleString() == "bigint"
-    path = stream_source_path(f"{sf_dir}/events.parquet")
-
-    def side(event_type: str, prefix: str) -> DataFrame:
-        s = spark.readStream.schema(raw_schema).parquet(path)
-        if ts_is_long:
-            s = s.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    def side(event_type: str) -> DataFrame:
         return (
-            s.where(F.col("event_type") == event_type)
+            stream_table(spark, sf_dir, "events")
+            .where(F.col("event_type") == event_type)
             .select(
-                F.col("user_id").alias(f"{prefix}_user"),
-                F.col("event_id").alias(f"{prefix}_id"),
-                F.col("ts").alias(f"{prefix}_ts"),
+                "user_id",
+                F.col("event_id").alias(f"{event_type}_id"),
+                F.col("ts").alias(f"{event_type}_ts"),
             )
-            .withWatermark(f"{prefix}_ts", "0 seconds")
         )
 
-    clicks = side("click", "click")
-    purchases = side("purchase", "purchase")
-    j = clicks.join(
-        purchases,
-        (F.col("click_user") == F.col("purchase_user"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 DAY")),
-        "inner",
+    j = SC.stream_stream_interval_join(
+        side("click"), side("purchase"), "user_id", "click_ts", "purchase_ts",
+        lower="0 seconds", upper="1 day",
     )
-    out = run_to_completion(
+    out = SC.run_to_completion(
         j.select(
-            F.col("click_user").alias("user_id"),
-            F.col("click_id"),
-            F.col("purchase_id"),
-            F.col("click_ts"),
-            F.col("purchase_ts"),
+            F.col("l.user_id").alias("user_id"),
+            "click_id",
+            "purchase_id",
+            "click_ts",
+            "purchase_ts",
         ),
-        f"stream_stream_join_{uuid.uuid4().hex[:8]}",
+        "stream_stream_join",
     )
     return out.orderBy("click_id", "purchase_id")
 
@@ -593,30 +481,17 @@ def q_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     the inner join; outer emission adds no state, it changes WHEN
     eviction emits (row + NULLs instead of silent drop). The sentinel
     is one far-future row per side."""
-    import uuid
 
-    from gearpump_spark.streaming.core import (
-        before_flush,
-        flush_sentinel_source,
-        run_to_completion,
-        stream_source_path,
-    )
-
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    ts_is_long = raw_schema["ts"].dataType.simpleString() == "bigint"
-    path = stream_source_path(f"{sf_dir}/events.parquet")
-
-    def side(event_type: str, prefix: str) -> DataFrame:
-        s = spark.readStream.schema(raw_schema).parquet(path)
+    def side(event_type: str) -> DataFrame:
+        ev = stream_table(spark, sf_dir, "events")
+        payload = [
+            F.col("event_id").alias(f"{event_type}_id"),
+            F.col("ts").alias(f"{event_type}_ts"),
+        ]
         # The sentinel unions in BEFORE the event-type filter drops its
         # NULL payload: project first, filter the real rows, then union
         # so the far-future row reaches this side's watermark operator.
-        proj = [
-            F.col("user_id").alias(f"{prefix}_user"),
-            F.col("event_id").alias(f"{prefix}_id"),
-            F.col("ts").alias(f"{prefix}_ts"),
-        ]
-        real = s.where(F.col("event_type") == event_type).select(*proj)
+        real = ev.where(F.col("event_type") == event_type).select("user_id", *payload)
         # The sentinel's join key must be NON-NULL: the outer join's
         # equi-condition makes Catalyst infer isnotnull(user) on the
         # preserved-side's opposite input and push it below the watermark
@@ -625,37 +500,24 @@ def q_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         # before it advances the clock — observed as the last day's
         # unmatched rows never flushing. -1 matches no real user, and the
         # far-future ts satisfies no interval, so it joins nothing.
-        sent = flush_sentinel_source(spark, raw_schema, "ts", ts_is_long).select(
-            F.coalesce(F.col("user_id"), F.lit(-1)).alias(f"{prefix}_user"),
-            F.col("event_id").alias(f"{prefix}_id"),
-            F.col("ts").alias(f"{prefix}_ts"),
+        sent = SC.flush_sentinel_source(spark, ev.schema).select(
+            F.coalesce(F.col("user_id"), F.lit(-1)).alias("user_id"), *payload
         )
-        u = real.union(sent)
-        if ts_is_long:
-            u = u.withColumn(
-                f"{prefix}_ts",
-                F.timestamp_micros(F.expr(f"{prefix}_ts div 1000")),
-            )
-        return u.withWatermark(f"{prefix}_ts", "0 seconds")
+        return real.union(sent)
 
-    clicks = side("click", "click")
-    purchases = side("purchase", "purchase")
-    j = clicks.join(
-        purchases,
-        (F.col("click_user") == F.col("purchase_user"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 DAY")),
-        "leftOuter",
+    j = SC.stream_stream_interval_join(
+        side("click"), side("purchase"), "user_id", "click_ts", "purchase_ts",
+        lower="0 seconds", upper="1 day", how="leftOuter",
     )
-    out = run_to_completion(
-        j.where(before_flush("click_ts")).select(
-            F.col("click_user").alias("user_id"),
-            F.col("click_id"),
-            F.col("purchase_id"),
-            F.col("click_ts"),
-            F.col("purchase_ts"),
+    out = SC.run_to_completion(
+        j.where(SC.before_flush("click_ts")).select(
+            F.col("l.user_id").alias("user_id"),
+            "click_id",
+            "purchase_id",
+            "click_ts",
+            "purchase_ts",
         ),
-        f"stream_join_outer_{uuid.uuid4().hex[:8]}",
+        "stream_join_outer",
     )
     return out.orderBy("click_id", "purchase_id")
 

@@ -170,8 +170,9 @@ class GearContext:
         """Read.Unbounded over files — a replayable source: restart replays
         from checkpointed offsets (reference TimeReplayableSource,
         streaming/.../transaction/api/TimeReplayableSource.scala:25-31)."""
-        df = self.spark.readStream.format("parquet").schema(schema).load(path)
-        return Stream(df, ts_col)
+        from gearpump_spark.streaming.core import replay_parquet_stream
+
+        return Stream(replay_parquet_stream(self.spark, path, schema), ts_col)
 
     def from_kafka(
         self,

@@ -8,8 +8,6 @@ from gearpump_spark.streaming.core import (
     before_flush,
     replay_parquet_stream,
     run_to_completion,
-    running_aggregate,
-    windowed_aggregate,
     stateful_running_count,
     session_window_aggregate,
     stream_dedup,
@@ -29,8 +27,6 @@ __all__ = [
     "before_flush",
     "replay_parquet_stream",
     "run_to_completion",
-    "running_aggregate",
-    "windowed_aggregate",
     "stateful_running_count",
     "session_window_aggregate",
     "stream_dedup",

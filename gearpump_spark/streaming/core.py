@@ -6,12 +6,13 @@ Mapping (SURVEY.md §1.3/§2.C):
   appmaster/ClockService.scala:302-309)
 - Watermark.MAX "source drained" → Trigger.AvailableNow completion
   (reference: Watermark.scala:29-36 — MAX means a bounded run finished)
-- WindowState sliding/tumbling monoid aggregation → groupBy(window(...))
-  with append mode = the reference's single final pane per key×window
+- WindowState sliding/tumbling monoid aggregation →
+  stream.KeyedStream.windowed(...).agg(...) with append mode = the
+  reference's single final pane per key×window
   (reference: state/impl/WindowState.scala:48-159;
   Beam default-trigger GBK runtime/BeamGroupByKeyTask.java:51-120)
-- NonWindowState running aggregate → update output mode
-  (reference: state/impl/NonWindowState.scala:30-48)
+- NonWindowState running aggregate → stream.KeyedStream.agg(...) with
+  update output mode (reference: state/impl/NonWindowState.scala:30-48)
 - PersistentTask checkpoint/recover → checkpointLocation + replayable
   file source (reference: state/api/PersistentTask.scala:36-98,
   docs/contents/introduction/message-delivery.md:8-13)
@@ -73,21 +74,6 @@ def before_flush(ts_col: str) -> Column:
     return F.col(ts_col) < F.timestamp_seconds(F.lit(FLUSH_EPOCH_SEC))
 
 
-def stream_source_path(path: str) -> str:
-    """Normalize a fixture path for FileStreamSource, which needs a
-    DIRECTORY to derive its basePath: Spark-written fixtures are
-    directories (taken directly); driver fixtures are single FILES,
-    where a one-char glob on the last character makes the source resolve
-    the parent directory while still matching exactly that one file.
-    Shared by every registered streaming query so both fixture shapes
-    work everywhere (ADVICE r9 #2)."""
-    import os
-
-    if os.path.isdir(path):
-        return path
-    return f"{path[:-1]}[{path[-1]}]"
-
-
 _SENTINEL_ROOT: str | None = None
 # Streaming queries sharing a source schema share one sentinel fixture;
 # plan-audit harnesses build many query plans concurrently (threads), so
@@ -115,7 +101,7 @@ def _sentinel_root() -> str:
 
 
 def flush_sentinel_source(
-    spark: SparkSession, schema: Any, ts_col: str = "ts", ts_is_long: bool = False
+    spark: SparkSession, schema: Any, ts_col: str = "ts"
 ) -> DataFrame:
     """Watermark.MAX as a second file source: one far-future row matching
     ``schema`` (non-ts fields ride NULL), written ONCE per process per
@@ -123,26 +109,18 @@ def flush_sentinel_source(
     into the real source to advance the event clock past every open
     window, then drop it with before_flush() after the watermark operator
     (reference: streaming/.../source/Watermark.scala:29-36).
-
-    ts_is_long: the ts field is raw epoch NANOS (nanosAsLong read path)
-    rather than a native timestamp."""
+    ``schema`` is the normalized one: its ts field is a timestamp."""
     import hashlib
     import os
 
     def _sent_col(field):
         if field.name == ts_col:
-            c = (
-                F.lit(FLUSH_EPOCH_SEC * 1_000_000_000).cast("bigint")
-                if ts_is_long
-                else F.timestamp_seconds(F.lit(FLUSH_EPOCH_SEC)).cast(field.dataType)
-            )
+            c = F.timestamp_seconds(F.lit(FLUSH_EPOCH_SEC)).cast(field.dataType)
         else:
             c = F.lit(None).cast(field.dataType)
         return c.alias(field.name)
 
-    key = hashlib.md5(
-        f"{ts_col}|{ts_is_long}|{schema.simpleString()}".encode()
-    ).hexdigest()[:12]
+    key = hashlib.md5(f"{ts_col}|{schema.simpleString()}".encode()).hexdigest()[:12]
     with _SENTINEL_WRITE_LOCK:
         path = os.path.join(_sentinel_root(), key)
         if not os.path.isdir(path):
@@ -155,35 +133,6 @@ def flush_sentinel_source(
             ).write.mode("overwrite").parquet(staging)
             os.rename(staging, path)
     return spark.readStream.schema(schema).parquet(path)
-
-
-def windowed_aggregate(
-    stream: DataFrame,
-    ts_col: str,
-    size: str,
-    step: str | None,
-    keys: list[str],
-    aggs: list[Column],
-    watermark_delay: str = "0 seconds",
-    drop_flush_sentinel: bool = False,
-    set_watermark: bool = True,
-) -> DataFrame:
-    """Watermarked tumbling/sliding window aggregation (final-pane
-    semantics under append mode — the reference's only trigger,
-    GroupByKeyTranslator.java:67-79 rejects everything else).
-
-    drop_flush_sentinel: filter rows at/after FLUSH_TS *after* the
-    watermark operator — they advance the clock (Watermark.MAX) but never
-    join an aggregate.
-
-    set_watermark=False when composing after another stateful operator
-    that already set it (stream_dedup, a join) — Spark disallows
-    redefining the watermark downstream."""
-    s = stream.withWatermark(ts_col, watermark_delay) if set_watermark else stream
-    if drop_flush_sentinel:
-        s = s.filter(before_flush(ts_col))
-    w = F.window(F.col(ts_col), size, step) if step else F.window(F.col(ts_col), size)
-    return s.groupBy(w.alias("window"), *keys).agg(*aggs)
 
 
 def _duration_us(spec: str) -> int:
@@ -229,23 +178,22 @@ def assign_windows(
     return df.withColumn(out_col, wins)
 
 
-def running_aggregate(stream: DataFrame, keys: list[str], aggs: list[Column]) -> DataFrame:
-    """NonWindowState: unbounded running aggregate; sink it with
-    outputMode('update') (reference: state/impl/NonWindowState.scala:30-48)."""
-    return stream.groupBy(*keys).agg(*aggs)
-
-
 def run_to_completion(
     df: DataFrame,
-    query_name: str,
+    prefix: str,
     output_mode: str = "append",
     checkpoint: str | None = None,
 ) -> DataFrame:
     """Drain a bounded stream to its Watermark.MAX end state and return the
     materialized result: availableNow trigger + memory sink, blocking until
     the source is exhausted (the reference blocks until the global clock
-    hits Watermark.MAX, cluster/client/BeamClientContext.scala)."""
+    hits Watermark.MAX, cluster/client/BeamClientContext.scala). The sink
+    is named ``prefix`` plus a random suffix, so concurrent and repeated
+    drains never collide."""
+    import uuid
+
     spark = df.sparkSession
+    query_name = f"{prefix}_{uuid.uuid4().hex[:8]}"
     writer = (
         df.writeStream.format("memory")
         .queryName(query_name)
@@ -254,16 +202,17 @@ def run_to_completion(
     )
     if checkpoint:
         writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    q.awaitTermination()
-    # Re-base the result on a checkpointed plan so the uuid-named sink
-    # view can be dropped immediately — repeated full-registry runs must
-    # not accumulate one driver-held memory sink per invocation (ADVICE
-    # r9 #1). localCheckpoint stays JVM-side (no Python round-trip); the
-    # harnesses' unpersist-between-queries discipline reclaims the blocks.
-    out = spark.table(query_name).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(query_name)
-    return out
+    try:
+        writer.start().awaitTermination()
+        # Re-base the result on a checkpointed plan so the sink view can
+        # be dropped — repeated full-registry runs must not accumulate one
+        # driver-held memory sink per invocation, failed drains included
+        # (ADVICE r9 #1). localCheckpoint stays JVM-side (no Python
+        # round-trip); the harnesses' unpersist-between-queries discipline
+        # reclaims the blocks.
+        return spark.table(query_name).localCheckpoint(eager=True)
+    finally:
+        spark.catalog.dropTempView(query_name)
 
 
 def replace_and_restart(running_query, start_replacement, timeout_sec: float = 60.0):
@@ -461,8 +410,8 @@ def monoid_windowed_state(
     passes a window's end, that pane is emitted once (append semantics)
     and its slot freed.
 
-    Built-in `windowed_aggregate` compiles to Spark's native window agg —
-    use THAT for sums/counts; this operator is the extension seam for
+    Built-in `KeyedStream.windowed(...).agg(...)` compiles to Spark's
+    native window agg — use THAT for sums/counts; this operator is the extension seam for
     monoids Spark lacks (custom sketches, CRDTs). `lift` maps a pandas
     Series of values to the monoid; `plus` combines; `zero` is identity.
 

@@ -104,6 +104,7 @@ SLOW_TESTS = {
     "test_stream_stream_interval_join_left_outer",
     "test_streaming_incremental_dedup_foreachbatch",
     "test_streaming_lr_scored_emission_matches_batch",
+    "test_streaming_query_stateful_shape[text_quality_lr_stream_score]",
     "test_timestamp_combiner_earliest",
     "test_tokenize_applies_training_segmentation",
     "test_tokenize_round_trips_and_compresses",

@@ -1631,3 +1631,69 @@ def test_jpeg_refined_fused_matches_two_stage(spark):
         ).collect()
     )
     assert fused == two_stage and len(fused) == 500
+
+
+# Every registered streaming query, with the count of each stateful or
+# watermark operator in the streaming plan it hands to run_to_completion.
+# Results alone cannot catch a refactor that drops a watermark or a dedup
+# state whose output happens to match on the fixtures; these counts can.
+STREAMING_STATEFUL_SHAPE = {
+    "q_window_tumbling_stream": {"EventTimeWatermark": 1, "StateStoreSave": 1},
+    "q_window_sliding_stream": {
+        "EventTimeWatermark": 1, "StateStoreSave": 1, "Expand": 1,
+    },
+    "q_stream_dedup_replay": {
+        "EventTimeWatermark": 1, "StateStoreSave": 1, "StreamingDeduplicate": 1,
+    },
+    "q_session_window_stream": {
+        "EventTimeWatermark": 1, "SessionWindowStateStoreSave": 1,
+    },
+    "q_running_aggregate_stream": {"StateStoreSave": 1},
+    "q_stream_stream_join": {
+        "EventTimeWatermark": 2, "StreamingSymmetricHashJoin": 1,
+    },
+    "q_stream_join_outer": {
+        "EventTimeWatermark": 2, "StreamingSymmetricHashJoin": 1,
+    },
+    "text_quality_lr_stream_score": {},
+}
+_STATEFUL_OPS = (
+    "EventTimeWatermark",
+    "StateStoreSave",
+    "StreamingDeduplicate",
+    "SessionWindowStateStoreSave",
+    "StreamingSymmetricHashJoin",
+    "Expand",
+)
+
+
+@pytest.mark.parametrize("name", sorted(STREAMING_STATEFUL_SHAPE))
+def test_streaming_query_stateful_shape(spark, sf_dir, monkeypatch, name):
+    """Capture the streaming DataFrame each registered streaming query
+    drains (run_to_completion is swapped for a recorder that stops the
+    query before it starts) and pin its stateful operators."""
+    import re
+
+    import gearpump_spark.streaming.core as core
+
+    class Drained(Exception):
+        pass
+
+    handed = []
+
+    def record(df, *args, **kwargs):
+        handed.append(df)
+        raise Drained
+
+    monkeypatch.setattr(core, "run_to_completion", record)
+    with pytest.raises(Drained):
+        QS[name](spark, sf_dir)
+    (df,) = handed
+    assert df.isStreaming
+    p = plan(df, "simple")
+    got = {
+        op: n
+        for op in _STATEFUL_OPS
+        if (n := len(re.findall(rf"(?<![A-Za-z]){op}\b", p)))
+    }
+    assert got == STREAMING_STATEFUL_SHAPE[name], p

@@ -12,13 +12,14 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
+from gearpump_spark.stream import Stream
 from gearpump_spark.streaming import (
     FLUSH_EPOCH_SEC,
     FLUSH_TS,
     assign_windows,
+    before_flush,
     replay_parquet_stream,
     run_to_completion,
-    windowed_aggregate,
 )
 
 TS = "ts"
@@ -74,12 +75,12 @@ def test_fixed_window_gbk(spark, tmp_path):
     stream = _stream_from_rows(
         spark, [[("a", 1, 0), ("a", 2, 5), ("a", 5, 15)]], tmp_path, "fixw", flush=True
     )
-    agg = windowed_aggregate(
-        stream, TS, "10 seconds", None, ["k"],
-        [F.sum("v").alias("total"), F.count("*").alias("n")],
-        drop_flush_sentinel=True,
+    agg = (
+        Stream(stream, TS).with_watermark("0 seconds").filter(before_flush(TS))
+        .key_by("k").windowed("10 seconds")
+        .agg(F.sum("v").alias("total"), F.count("*").alias("n"))
     )
-    out = run_to_completion(agg, "fixed_window_gbk", output_mode="append").collect()
+    out = run_to_completion(agg.to_df(), "fixed_window_gbk", output_mode="append").collect()
     panes = {(r.window.start.second, r.total, r.n) for r in out}
     assert panes == {(0, 3, 2), (10, 5, 1)}
 
@@ -110,13 +111,13 @@ def test_timestamp_combiner_earliest(spark, tmp_path):
     stream = _stream_from_rows(
         spark, [[("a", 1, 1), ("a", 2, 2), ("b", 5, 3)]], tmp_path, "tscomb", flush=True
     )
-    agg = windowed_aggregate(
-        stream, TS, "10 seconds", None, ["k"],
-        [F.sum("v").alias("total"), F.min(TS).alias("out_ts")],
-        drop_flush_sentinel=True,
+    agg = (
+        Stream(stream, TS).with_watermark("0 seconds").filter(before_flush(TS))
+        .key_by("k").windowed("10 seconds")
+        .agg(F.sum("v").alias("total"), F.min(TS).alias("out_ts"))
     )
     out = {(r.k, r.total, r.out_ts.second) for r in
-           run_to_completion(agg, "ts_combiner", output_mode="append").collect()}
+           run_to_completion(agg.to_df(), "ts_combiner", output_mode="append").collect()}
     assert out == {("a", 3, 1), ("b", 5, 3)}
 
 
@@ -132,12 +133,12 @@ def test_late_data_dropped_behind_watermark(spark, tmp_path):
 
     def run_drain():
         stream = replay_parquet_stream(spark, path, schema)
-        agg = windowed_aggregate(
-            stream, TS, "10 seconds", None, ["k"],
-            [F.sum("v").alias("total")], watermark_delay="10 seconds",
+        agg = (
+            Stream(stream, TS).with_watermark("10 seconds")
+            .key_by("k").windowed("10 seconds").agg(F.sum("v").alias("total"))
         )
         q = (
-            agg.writeStream.format("parquet").option("path", out)
+            agg.to_df().writeStream.format("parquet").option("path", out)
             .option("checkpointLocation", ck).outputMode("append")
             .trigger(availableNow=True).start()
         )
@@ -205,11 +206,11 @@ def test_streaming_windowed_agg_matches_batch(spark, sf_dir):
         F.timestamp_seconds("sec").alias("ts"),
     ).selectExpr(*[f.name for f in stream_src.schema]).coalesce(1).write.mode("append").parquet(tmp)
     stream = replay_parquet_stream(spark, tmp, stream_src.schema)
-    agg = windowed_aggregate(
-        stream, "ts", "1 hour", None, [], [F.count("*").alias("n")],
-        drop_flush_sentinel=True,
+    agg = (
+        Stream(stream, "ts").with_watermark("0 seconds").filter(before_flush("ts"))
+        .key_by().windowed("1 hour").agg(F.count("*").alias("n"))
     )
-    out = run_to_completion(agg, "stream_win", output_mode="append")
+    out = run_to_completion(agg.to_df(), "stream_win", output_mode="append")
     got = {(r.window.start, r.n) for r in out.collect()}
     assert got == batch
 
@@ -450,7 +451,7 @@ def test_stream_source_path_shapes(tmp_path):
     """Both fixture shapes resolve: a single FILE becomes a one-char glob
     (FileStreamSource derives basePath from the parent dir), a
     Spark-written DIRECTORY passes through untouched (ADVICE r9 #2)."""
-    from gearpump_spark.streaming.core import stream_source_path
+    from gearpump_spark.datasets import stream_source_path
 
     d = tmp_path / "events.parquet"
     d.mkdir()
@@ -472,13 +473,12 @@ def test_dedup_then_window_pipeline(spark, tmp_path):
     ]
     stream = _stream_from_rows(spark, chunks, tmp_path, "dw_pipe", flush=True)
     deduped = stream_dedup(stream, ["k", "v"], ts_col=TS)
-    agg = windowed_aggregate(
-        deduped, TS, "10 seconds", None, ["k"],
-        [F.sum("v").alias("total"), F.count("*").alias("n")],
-        drop_flush_sentinel=True,
-        set_watermark=False,  # stream_dedup already set it
+    agg = (
+        Stream(deduped, TS).filter(before_flush(TS))  # stream_dedup set the watermark
+        .key_by("k").windowed("10 seconds")
+        .agg(F.sum("v").alias("total"), F.count("*").alias("n"))
     )
-    out = run_to_completion(agg, "dw_pipe_out", output_mode="append").collect()
+    out = run_to_completion(agg.to_df(), "dw_pipe_out", output_mode="append").collect()
     panes = {(r.k, r.window.start.second, r.total, r.n) for r in out}
     assert panes == {("a", 0, 3, 2), ("b", 0, 5, 1)}
 
@@ -930,11 +930,6 @@ def test_update_mode_running_aggregate_multibatch_fold(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from gearpump_spark.streaming.core import (
-        run_to_completion,
-        running_aggregate,
-    )
-
     t0 = dt.datetime(2024, 1, 1)
     rows = [
         (t0 + dt.timedelta(minutes=i), ["click", "view"][i % 2], i)
@@ -949,16 +944,12 @@ def test_update_mode_running_aggregate_multibatch_fold(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    agg = running_aggregate(
-        stream,
-        ["event_type"],
-        [
-            F.count("*").alias("n"),
-            F.min("ts").alias("first_ts"),
-            F.max("ts").alias("last_ts"),
-        ],
+    agg = Stream(stream).key_by("event_type").agg(
+        F.count("*").alias("n"),
+        F.min("ts").alias("first_ts"),
+        F.max("ts").alias("last_ts"),
     )
-    log = run_to_completion(agg, "run_agg_multibatch", output_mode="update")
+    log = run_to_completion(agg.to_df(), "run_agg_multibatch", output_mode="update")
     assert log.count() > 2  # >|keys| emissions: multiple batches updated
 
     folded = {
@@ -982,3 +973,43 @@ def test_update_mode_running_aggregate_multibatch_fold(spark, tmp_path):
         .collect()
     }
     assert folded == batch
+
+
+def test_failed_drain_leaves_no_sink_view(spark, tmp_path):
+    """run_to_completion names the memory sink itself (prefix + random
+    suffix) and drops its temp view even when the stream fails, so a
+    failed query cannot leave a driver-held sink registered."""
+    from pyspark.errors import StreamingQueryException
+
+    stream = _stream_from_rows(spark, [[("a", 1, 0)]], tmp_path, "boom")
+    failing = stream.select(F.raise_error(F.lit("boom")).alias("x"))
+    with pytest.raises(StreamingQueryException, match="boom"):
+        run_to_completion(failing, "failing_drain")
+    assert not [
+        t.name for t in spark.catalog.listTables() if t.name.startswith("failing_drain")
+    ]
+
+
+def test_stream_table_normalizes_nanos_ts_like_table(spark, tmp_path):
+    """table() and stream_table() share one ns→µs rule for events.ts: a
+    TIMESTAMP(NANOS) fixture (read as an epoch-nano long) comes out of
+    both loaders as the same truncated µs timestamps."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from gearpump_spark.datasets import stream_table, table
+
+    nanos = [1_704_067_200_123_456_789, 1_704_067_260_000_000_999]
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array([1, 2], pa.int64()),
+            "ts": pa.array(nanos, pa.timestamp("ns")),
+        }),
+        str(tmp_path / "events.parquet"),
+    )
+    batch = sorted(r.ts for r in table(spark, str(tmp_path), "events").collect())
+    stream = stream_table(spark, str(tmp_path), "events")
+    assert dict(stream.dtypes)["ts"] == "timestamp"
+    drained = sorted(r.ts for r in run_to_completion(stream, "nanos_ts").collect())
+    assert drained == batch
+    assert [t.microsecond for t in batch] == [123456, 0]

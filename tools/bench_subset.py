@@ -11,7 +11,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -32,28 +31,12 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     qs = all_queries()
     # codegen warmup at sf0.001 + page-cache warm, same as bench.py
-    warm_dir = os.path.join(os.path.dirname(SF_DIR.rstrip("/")), "sf0.001")
-    spark.range(1000).selectExpr("sum(id)").collect()
-    for name in names:
-        try:
-            qs[name](spark, warm_dir).write.mode("overwrite").format("noop").save()
-        except Exception:
-            pass
+    bench.warm_codegen(spark, qs, names, SF_DIR)
     bench.warm_page_cache(SF_DIR)
     out = {}
     construct = {}
     for name in names:
-        best = float("inf")
-        best_c = float("inf")
-        for _ in range(RUNS):
-            c0 = time.perf_counter()
-            df = qs[name](spark, SF_DIR)
-            best_c = min(best_c, time.perf_counter() - c0)
-            t0 = time.perf_counter()
-            df.write.mode("overwrite").format("noop").save()
-            best = min(best, time.perf_counter() - t0)
-        out[name] = round(best, 3)
-        construct[name] = round(best_c, 3)
+        out[name], construct[name] = bench.run_best_of_2(spark, qs[name], SF_DIR, RUNS)
     calib1 = bench.cpu_calibration()
     spark.stop()
     print(json.dumps({"queries": out, "construction": construct,
